@@ -302,9 +302,11 @@ class IngestWorkload:
         n_ops = len(op_names)
         batches = self._wait_for_batches(self.WARMUP_OPS + n_ops)[self.WARMUP_OPS:]
         timed = [u for u in self.upserts if u["op"] is not None]
+        # mean, not median: progress reports whole milliseconds, and a
+        # median of a few ms-quantized phases can read the same every run
         values = {
-            f"streaming.{metric}": stats.median(
-                [b["duration_ms"].get(phase, 0) / 1000.0 for b in batches])
+            f"streaming.{metric}":
+                sum(b["duration_ms"].get(phase, 0) for b in batches) / 1000.0 / len(batches)
             for phase, metric in STREAM_PHASES.items()
         }
         values["upsert.call_s"] = stats.median([u["secs"] for u in timed])
