@@ -241,7 +241,9 @@ def main() -> None:
                 return None
             vals = [int(x) for x in parts[1:]]
             steal = vals[7] if len(vals) > 7 else 0
-            return sum(vals), steal
+            # guest/guest_nice (fields 9-10) are already folded into
+            # user/nice: total only the first eight fields
+            return sum(vals[:8]), steal
         except (OSError, ValueError, IndexError):
             return None
 

@@ -25,6 +25,10 @@ Scale design (the point of each algorithm):
 - **Embedding cosine** — exact threshold join; the scale path buckets by
   LSH sign patterns first (see operators.similarity).
 
+Every banded path (MinHash, SimHash, embedding LSH, and the multimodal
+pHash pairs) generates its candidates through the one ``band_candidates``
+kernel, then runs its own exact verify.
+
 Everything below is built-in DataFrame ops (higher-order array
 functions, explode/groupBy/join) — no Python UDFs anywhere.
 """
@@ -32,7 +36,7 @@ functions, explode/groupBy/join) — no Python UDFs anywhere.
 from __future__ import annotations
 
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from eventbridge_etl_spark.operators.partitioning import fan_out as _fan_out
@@ -178,6 +182,21 @@ def jaccard_pairs_prefix_filtered(
     return _verify_jaccard(cand, _int_encode(t), tau)
 
 
+def _size_ok(tau: float) -> Column:
+    """Lossless Jaccard size bound over set sizes ``_na``/``_nb``:
+    jaccard <= min(|A|,|B|)/max(|A|,|B|), so a pair whose sizes are too
+    far apart can never reach tau.  Compared in the SAME round-to-6 form
+    as the final jaccard filter: the raw `least >= tau*greatest` form
+    rejected 9 >= 0.9*10 (= 9.000000000000002 in IEEE) — a pair at
+    exactly tau (review finding r6).  round(J,6) <= round(min/max,6) by
+    monotonicity, so this prune can never drop a pair the final filter
+    would keep."""
+    return (
+        F.round(F.least("_na", "_nb").cast("double") / F.greatest("_na", "_nb"), 6)
+        >= tau
+    )
+
+
 def _verify_jaccard(cand: DataFrame, token_sets: DataFrame, tau: float) -> DataFrame:
     ta = token_sets.select(
         F.col("_id").alias("_ida"), F.col("_toks").alias("_ta"), F.col("_n").alias("_na")
@@ -187,24 +206,12 @@ def _verify_jaccard(cand: DataFrame, token_sets: DataFrame, tau: float) -> DataF
     )
     common = F.size(F.array_intersect("_ta", "_tb"))
     jac = common / (F.col("_na") + F.col("_nb") - common)
-    # Lossless size prefilter: jaccard <= min(|A|,|B|)/max(|A|,|B|), so a
-    # pair whose set sizes are too far apart can never reach tau — drop it
-    # BEFORE the array_intersect (the expensive part of verification).
-    # Compared in the SAME round-to-6 form as the final filter below:
-    # the raw `least >= tau*greatest` form rejected 9 >= 0.9*10
-    # (= 9.000000000000002 in IEEE) — a pair at exactly tau (review
-    # finding r6).  round(J,6) <= round(min/max,6) by monotonicity, so
-    # this prune can never drop a pair the final filter would keep.
-    size_ok = (
-        F.round(
-            F.least("_na", "_nb").cast("double") / F.greatest("_na", "_nb"), 6
-        )
-        >= tau
-    )
+    # size prefilter BEFORE the array_intersect (the expensive part of
+    # verification)
     return (
         cand.join(ta, "_ida")
         .join(tb, "_idb")
-        .filter(size_ok)
+        .filter(_size_ok(tau))
         .withColumn("jaccard", F.round(jac, 6))
         .filter(F.col("jaccard") >= tau)
         .select(
@@ -363,57 +370,23 @@ def _minhash_lsh_rep_pairs(
 ) -> DataFrame:
     """The banded-LSH core over an already-deduplicated ``(_id, _toks,
     _n)`` token-set frame."""
-    # band encoding delegated to _band_rows — the SAME function the
-    # admission-index store builds with, so buckets collide identically
-    # by construction (review r6: this body was previously inlined
-    # here, leaving the shared-encoding invariant to a comment).
     # ``_n`` (token-set size, one int) rides along so the lossless size
     # bound prunes candidates AT THE BAND JOIN, before the distinct's
-    # exchange and the two verify joins ever see them (r12: jaccard <=
-    # min|A|,|B| / max|A|,|B| drops 698k -> 441k candidate pairs at
-    # sf0.1/tau=0.9 — 37% fewer rows shuffled into distinct+verify —
-    # measured ~10% off the whole query; the SAME rounded-comparison
-    # form as _verify_jaccard's prefilter, so it can never drop a pair
-    # the final jaccard filter would keep).
-    banded = _band_rows(rep_t, num_hashes, bands, keep_n=True)
-    # Persist the banded rows: the self-join otherwise evaluates the
-    # signature subtree TWICE (once per branch).  Lazy persist — the
-    # first action's left branch populates the cache, the right branch
-    # reuses it.  Footprint is tiny (bands rows/doc x ~50 B) and
+    # exchange and the two verify joins ever see them (r12: drops 698k
+    # -> 441k candidate pairs at sf0.1/tau=0.9 — 37% fewer rows shuffled
+    # into distinct+verify — measured ~10% off the whole query; the SAME
+    # predicate as _verify_jaccard's prefilter, so it can never drop a
+    # pair the final jaccard filter would keep).  Persist the banded
+    # frame: the band self-join otherwise evaluates the signature
+    # subtree TWICE (once per branch).  Lazy persist — the first
+    # action's left branch populates the cache, the right branch reuses
+    # it.  Footprint is tiny (one ~50 B string per band per doc) and
     # MEMORY_AND_DISK self-evicts.
-    banded = scoped_persist(banded)
-    left = banded.select(
-        F.col("_id").alias("_ida"), F.col("_n").alias("_na"), "_band", "_bh"
-    )
-    right = banded.select(
-        F.col("_id").alias("_idb"), F.col("_n").alias("_nb"), "_band", "_bh"
-    )
-    size_ok = (
-        F.round(
-            F.least("_na", "_nb").cast("double") / F.greatest("_na", "_nb"), 6
-        )
-        >= tau
-    )
-    # The distinct's exchange does double duty: besides dedup it
-    # REBALANCES the candidate pairs, which leave the band join
-    # partitioned by (band, bucket-hash) — heavily skewed when the corpus
-    # has large near-dup clusters.  A pipelined first-matching-band dedup
-    # filter (no shuffle) measured 3x SLOWER at sf0.1 because the
-    # array_intersect verification then runs on the skewed partitions.
-    # (An in-bucket collect_list+pair-explode variant — one exchange
-    # fewer — also measured ~10% SLOWER at sf0.1, r12: the quadratic
-    # explode concentrates in the bucket tasks the distinct exists to
-    # rebalance away from.)
-    cand = (
-        left.join(right, ["_band", "_bh"])
-        .filter((F.col("_ida") < F.col("_idb")) & size_ok)
-        .select("_ida", "_idb")
-        .distinct()
-    )
+    banded = scoped_persist(_minhash_bands(rep_t, num_hashes, bands, "_n"))
+    cand = band_candidates(banded, _size_ok(tau)).select("_ida", "_idb")
     # int-encode the already-computed token sets for faster intersects
     # — no re-tokenization
-    t_int = _int_encode(rep_t)
-    return _verify_jaccard(cand, t_int, tau)
+    return _verify_jaccard(cand, _int_encode(rep_t), tau)
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFrame:
@@ -423,8 +396,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
     md5 (an unbiased pseudo-random bit); the fingerprint bit is the sign
     of the vote sum over the doc's tokens.  Computed as explode ->
     groupBy(sum of per-bit votes) — one shuffle of (id, 32 ints).
-    Returns (id_col, simhash_bits string, plus 4 band columns for
-    candidate generation)."""
+    Returns (id_col, simhash_bits string)."""
     assert bits <= 32
     t = _token_sets(df, id_col, text_col)
     ex = t.select("_id", F.explode("_toks").alias("_tok")).withColumn(
@@ -438,13 +410,9 @@ def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 32) -> DataFr
     ]
     summed = ex.groupBy("_id").agg(*votes)
     bit_chars = [F.when(F.col(f"_v{j}") > 0, "1").otherwise("0") for j in range(bits)]
-    fp = summed.select(
+    return summed.select(
         F.col("_id").alias(id_col), F.concat(*bit_chars).alias("simhash_bits")
     )
-    band_w = bits // 4
-    for b in range(4):
-        fp = fp.withColumn(f"band_{b}", F.substring("simhash_bits", b * band_w + 1, band_w))
-    return fp
 
 
 def simhash_pairs(
@@ -452,29 +420,26 @@ def simhash_pairs(
 ) -> DataFrame:
     """Near-dup pairs with SimHash Hamming distance <= max_hamming.
 
-    Candidates: exact match on any of the 4 bands (pigeonhole-lossless
-    for max_hamming <= 3); verification compares the 32 fingerprint
-    chars.  Returns (id_a, id_b, hamming)."""
+    Candidates: exact match on any of the 4 8-bit bands of the 32-bit
+    fingerprint (pigeonhole-lossless for max_hamming <= 3), generated by
+    ONE ``band_candidates`` self-join.  The fingerprint rides through it
+    packed into a long, so the verify is ``bit_count(a ^ b)`` on the
+    pair row — no join back to the fingerprints, and no per-pair string
+    split (the char-by-char compare of the 32-char strings measured
+    34.7 s vs 2.7 s for the same 3.9M pairs at sf0.1, local[4] on a
+    4-vCPU VM).  Returns
+    (id_a, id_b, hamming)."""
     fp = scoped_persist(simhash(_fan_out(df), id_col, text_col))
-    cands = None
-    for b in range(4):
-        left = fp.select(F.col(id_col).alias("_ida"), F.col(f"band_{b}").alias("_bh"))
-        right = fp.select(F.col(id_col).alias("_idb"), F.col(f"band_{b}").alias("_bh"))
-        c = left.join(right, "_bh").filter(F.col("_ida") < F.col("_idb")).select("_ida", "_idb")
-        cands = c if cands is None else cands.union(c)
-    cands = cands.distinct()
-    fa = fp.select(F.col(id_col).alias("_ida"), F.col("simhash_bits").alias("_fa"))
-    fb = fp.select(F.col(id_col).alias("_idb"), F.col("simhash_bits").alias("_fb"))
-    chars_a = F.split(F.col("_fa"), "(?!^)")  # split into chars
-    chars_b = F.split(F.col("_fb"), "(?!^)")
-    hamming = F.size(
-        F.filter(
-            F.zip_with(chars_a, chars_b, lambda x, y: x != y), lambda d: d
-        )
+    keyed = fp.select(
+        F.col(id_col).alias("_id"),
+        F.conv("simhash_bits", 2, 10).cast("long").alias("_f"),
+        F.array(*[F.substring("simhash_bits", 8 * b + 1, 8) for b in range(4)]).alias(
+            "_bands"
+        ),
     )
+    hamming = F.bit_count(F.expr("_fa ^ _fb")).cast("int")
     return (
-        cands.join(fa, "_ida")
-        .join(fb, "_idb")
+        band_candidates(keyed)
         .withColumn("hamming", hamming)
         .filter(F.col("hamming") <= max_hamming)
         .select(F.col("_ida").alias("id_a"), F.col("_idb").alias("id_b"), "hamming")
@@ -502,7 +467,11 @@ def near_dup_clusters(
     the pathological chain.  Each round is one shuffle join + one
     aggregate, with ``localCheckpoint`` truncating the lineage so plans
     stay flat; the driver-side loop itself moves no data (only a
-    converged? count crosses to the driver).  At 1000-executor scale
+    converged? count crosses to the driver).  The checkpoint blocks
+    (edges and every round's labels) are NOT released by
+    ``cache.release_tracked``; their lifetime is bound to garbage
+    collection — Spark's ContextCleaner drops them once the
+    checkpointed RDDs are collected.  At 1000-executor scale
     the same loop runs with durable ``checkpoint`` and the
     large-star/small-star edge rewriting variant — the shape here is
     the small-diameter core of that algorithm.
@@ -565,53 +534,36 @@ def embedding_near_dup_pairs_lsh(
 
     Instead of the O(n^2) self-join of ``embedding_near_dup_pairs``, each
     vector is hashed into ``n_tables`` sign-pattern buckets (all tables
-    in ONE pass over the corpus — an array of (table, bucket) structs,
-    exploded); candidates are the pairs that collide in at least one
-    table, and only those pairs pay the exact cosine.  Per-table bucket
-    population ~ n/2^n_planes, so candidate volume is ~n^2 *
-    n_tables/2^n_planes vs n^2 — the pruning factor.  Recall for pairs
+    in ONE pass over the corpus — ``similarity.hyperplane_lsh_bands``);
+    candidates are the pairs that collide in at least one table
+    (``band_candidates``), and only those pairs pay the exact cosine.
+    Per-table bucket population ~ n/2^n_planes, so candidate volume is
+    ~n^2 * n_tables/2^n_planes vs n^2 — the pruning factor.  Recall for pairs
     with cosine >= tau is 1-(1-(1-theta/pi)^n_planes)^n_tables
     (probabilistic, not lossless — the deliberate trade at scale).
 
     The hyperplanes are deterministic (seeded), so an oracle can
     replicate bucket assignment exactly with the planes as literals.
     """
-    from eventbridge_etl_spark.operators.similarity import (
-        cosine,
-        hyperplane_lsh_bucket,
-    )
+    from eventbridge_etl_spark.operators.similarity import cosine, hyperplane_lsh_bands
 
     v = _fan_out(df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")))
-    tb = F.array(
-        *[
-            F.struct(
-                F.lit(t).alias("_tbl"),
-                hyperplane_lsh_bucket(F.col("_v"), dim, n_planes, seed=seed + t).alias(
-                    "_bkt"
-                ),
-            )
-            for t in range(n_tables)
-        ]
+    cand = band_candidates(
+        v.select(
+            "_id",
+            hyperplane_lsh_bands(F.col("_v"), dim, n_planes, n_tables, seed).alias(
+                "_bands"
+            ),
+        )
     )
-    banded = v.select("_id", F.explode(tb).alias("_tb")).select(
-        "_id", "_tb._tbl", "_tb._bkt"
-    )
-    left = banded.select(F.col("_id").alias("id_a"), "_tbl", "_bkt")
-    right = banded.select(F.col("_id").alias("id_b"), "_tbl", "_bkt")
-    cand = (
-        left.join(right, ["_tbl", "_bkt"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    a = v.select(F.col("_id").alias("id_a"), F.col("_v").alias("_va"))
-    b = v.select(F.col("_id").alias("id_b"), F.col("_v").alias("_vb"))
+    a = v.select(F.col("_id").alias("_ida"), F.col("_v").alias("_va"))
+    b = v.select(F.col("_id").alias("_idb"), F.col("_v").alias("_vb"))
     return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
+        cand.join(a, "_ida")
+        .join(b, "_idb")
         .withColumn("cosine", F.round(cosine(F.col("_va"), F.col("_vb")), 6))
         .filter(F.col("cosine") >= tau)
-        .select("id_a", "id_b", "cosine")
+        .select(F.col("_ida").alias("id_a"), F.col("_idb").alias("id_b"), "cosine")
     )
 
 
@@ -647,8 +599,8 @@ def _quadratic_guard(
             f"{op}: input exceeds the quadratic-verifier row budget "
             f"({row_budget}).  This operator is the within-bucket/"
             f"verification-grade O(n²) path; at scale generate "
-            f"candidates first (minhash_lsh_pairs / "
-            f"lsh_candidate_pairs / similarity.hyperplane_lsh_buckets) "
+            f"candidates first (minhash_lsh_pairs / lsh_candidate_pairs / "
+            f"embedding_near_dup_pairs_lsh / band_candidates) "
             f"and verify those, or pass within_buckets=True / a larger "
             f"row_budget if the input really is a bounded block."
         )
@@ -667,8 +619,8 @@ def embedding_near_dup_pairs(
 
     This is the *verification-grade* operator (O(n^2) comparisons but
     only arithmetic per pair — fine to run within LSH buckets or blocks).
-    For the 100 TB path, generate candidates first with
-    similarity.hyperplane_lsh_buckets and run this within buckets.
+    For the 100 TB path, use ``embedding_near_dup_pairs_lsh`` (hyperplane
+    buckets through ``band_candidates``) or run this within buckets.
     That contract is mechanical, not advisory: unless the caller passes
     ``within_buckets=True`` (input already blocked) the input must fit
     ``row_budget`` rows or the operator raises (``_quadratic_guard``)."""
@@ -1226,18 +1178,12 @@ def lsh_candidate_pairs(
     max(stage) instead of sum and makes the expensive half resumable.
     """
     t = _token_sets(df, id_col, text_col)
-    # banded rows feed the self-join twice; persist so tokenization +
-    # signing run once (same rationale as _minhash_lsh_rep_pairs)
-    banded = scoped_persist(_band_rows(t, num_hashes, bands))
-    left = banded.select(F.col("_id").alias("id_a"), "_band", "_bh")
-    right = banded.select(F.col("_id").alias("id_b"), "_band", "_bh")
-    # the distinct's exchange rebalances pairs off the (band, bucket)
-    # partitioning — heavily skewed when near-dup clusters are large
-    return (
-        left.join(right, ["_band", "_bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+    # the banded frame feeds the self-join twice; persist so
+    # tokenization + signing run once (same rationale as
+    # _minhash_lsh_rep_pairs)
+    banded = scoped_persist(_minhash_bands(t, num_hashes, bands))
+    return band_candidates(banded).select(
+        F.col("_ida").alias("id_a"), F.col("_idb").alias("id_b")
     )
 
 
@@ -1403,25 +1349,85 @@ def tfidf_cosine_staged(
     )
 
 
-def _band_rows(
-    t: DataFrame, num_hashes: int, bands: int, keep_n: bool = False
+def _minhash_bands(
+    t: DataFrame, num_hashes: int, bands: int, *carry: str
 ) -> DataFrame:
-    """(_id, _band, _bh) banded-signature rows for a token-set frame —
-    the same band encoding as ``_minhash_lsh_rep_pairs`` (r signature
-    ints joined verbatim), so indexes built here collide identically.
-    ``keep_n=True`` additionally carries the token-set size ``_n`` (one
-    int per row) so the LSH pair path can size-prune candidates at the
-    band join itself."""
+    """``(_id, *carry, _bands)`` for a token-set frame: one band value
+    per band, its r = num_hashes/bands signature ints joined verbatim.
+    The ONE band encoding shared by the pair path (``band_candidates``)
+    and the admission index (``_band_rows``), so their buckets collide
+    identically by construction."""
     r = num_hashes // bands
     signed = _sign_token_sets(t, num_hashes)
-    band_cols = F.array(
-        *[
-            F.concat_ws(",", *[F.col("_sig")[b * r + i] for i in range(r)])
-            for b in range(bands)
-        ]
+    band_vals = [
+        F.concat_ws(",", *[F.col("_sig")[b * r + i] for i in range(r)])
+        for b in range(bands)
+    ]
+    return signed.select("_id", *carry, F.array(*band_vals).alias("_bands"))
+
+
+def _band_rows(t: DataFrame, num_hashes: int, bands: int) -> DataFrame:
+    """(_id, _band, _bh) banded-signature rows for a token-set frame —
+    the index/probe form of ``_minhash_bands``."""
+    return _minhash_bands(t, num_hashes, bands).select(
+        "_id", F.posexplode("_bands").alias("_band", "_bh")
     )
-    cols = ["_id", "_n"] if keep_n else ["_id"]
-    return signed.select(*cols, F.posexplode(band_cols).alias("_band", "_bh"))
+
+
+def band_candidates(df: DataFrame, pair_filter: Column | None = None) -> DataFrame:
+    """The one LSH candidate-generation kernel: distinct pairs of rows
+    that share a value at the same position of their ``_bands`` array.
+
+    ``df`` holds ``_id``, ``_bands`` (an array with one value per band —
+    minhash signature bands, simhash / pHash bit bands, hyperplane
+    buckets per table) and any other columns, which are CARRIED: each
+    column ``c`` comes out as ``ca`` / ``cb`` for the two sides.  One
+    posexplode, one equi self-join on (band position, band value),
+    ``_ida < _idb``, then the optional ``pair_filter`` on each
+    band-join row (it sees ``_ida``/``_idb``, the carried columns and
+    ``_band``/``_bv``), then ``distinct``.  Returns
+    ``(_ida, _idb, <carried>a, <carried>b)``; each caller runs its own
+    exact verify on the pairs.  With unique ids a carried column is a
+    function of its id, so it never changes the pair set.
+
+    Rows whose band value is NULL never pair (equi-join semantics).
+    """
+    carried = [c for c in df.columns if c not in ("_id", "_bands")]
+    # posexplode_OUTER: over a plain attribute, posexplode makes Catalyst
+    # infer ``size(_bands) > 0`` and push it below the projection that
+    # builds the array, evaluating every band expression twice per row
+    # (+9% on embedding LSH at sf0.1, local[4] on a 4-vCPU VM, where a
+    # band is n_planes dot products).  The outer form infers nothing;
+    # the (NULL, NULL) row it emits for an empty array never survives
+    # the equi-join.
+    rows = df.select(
+        "_id", *carried, F.posexplode_outer("_bands").alias("_band", "_bv")
+    )
+
+    def side(s: str) -> DataFrame:
+        return rows.select(
+            "_band", "_bv", *[F.col(c).alias(c + s) for c in ("_id", *carried)]
+        )
+
+    pairs = (
+        side("a")
+        .join(side("b"), ["_band", "_bv"])
+        .filter(F.col("_ida") < F.col("_idb"))
+    )
+    if pair_filter is not None:
+        pairs = pairs.filter(pair_filter)
+    # The distinct's exchange does double duty: besides dedup (a pair
+    # sharing several bands) it REBALANCES the candidate pairs, which
+    # leave the band join partitioned by (band, value) — heavily skewed
+    # when the corpus has large near-dup clusters.  A pipelined
+    # first-matching-band dedup filter (no shuffle) measured 3x SLOWER
+    # on minhash at sf0.1 because the array_intersect verification then
+    # runs on the skewed partitions.  (An in-bucket collect_list+
+    # pair-explode variant — one exchange fewer — also measured ~10%
+    # SLOWER at sf0.1, r12: the quadratic explode concentrates in the
+    # bucket tasks the distinct exists to rebalance away from.)
+    out = ["_ida", "_idb", *[c + "a" for c in carried], *[c + "b" for c in carried]]
+    return pairs.select(*out).distinct()
 
 
 def minhash_band_index(

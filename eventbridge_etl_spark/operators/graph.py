@@ -271,6 +271,10 @@ def bfs_hops(
     3 keeps byte-identical plans and results), every 4 levels beyond.
     Deep traversals trade the checkpoint's executor-local block
     storage (weaker fault tolerance, guide §5) for bounded planning.
+    Those checkpoint blocks are NOT released by
+    ``cache.release_tracked`` (a checkpoint is not a tracked persist);
+    their lifetime is bound to garbage collection — Spark's
+    ContextCleaner drops them once the checkpointed RDDs are collected.
     """
     if checkpoint_every is None:
         checkpoint_every = 4 if max_hops > 8 else 0

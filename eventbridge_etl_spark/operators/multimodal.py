@@ -36,6 +36,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from eventbridge_etl_spark.operators.dedup import band_candidates
+
 #: Canonical multimodal column bundle: payload + typed metadata.
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -711,10 +713,11 @@ def phash_near_dup_pairs(
 
     Pigeonhole banding: split the hash into ``max_hamming + 1`` disjoint
     bit-bands — two hashes within the distance bound MUST agree exactly
-    on at least one band, so candidates = equi-joins on (band index,
-    band value), which Spark executes as ordinary hash shuffles keyed on
-    16-bit-ish values.  Verification is ``bit_count(a ^ b)`` — one JVM
-    expression, no Python.  Returns (id_a, id_b, hamming), id_a < id_b.
+    on at least one band, so candidates = ONE equi self-join on (band
+    index, band value) (``dedup.band_candidates``), which Spark executes
+    as an ordinary hash shuffle keyed on 16-bit-ish values.
+    Verification is ``bit_count(a ^ b)`` — one JVM expression, no
+    Python.  Returns (id_a, id_b, hamming), id_a < id_b.
 
     Scale: candidate volume is governed by band-value collisions, not
     corpus size squared; a degenerate band (e.g. all-zero high bits
@@ -735,32 +738,10 @@ def phash_near_dup_pairs(
             return shifted
         return shifted.bitwiseAND(F.lit((1 << width) - 1))
 
-    bands = h.select(
-        "_id",
-        "_h",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        _band_val(b).alias("val"),
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("_bv"),
-    ).select("_id", "_h", F.col("_bv.band").alias("_band"), F.col("_bv.val").alias("_val"))
-    left = bands.select(
-        F.col("_band"), F.col("_val"), F.col("_id").alias("_ida"), F.col("_h").alias("_ha")
-    )
-    right = bands.select(
-        F.col("_band"), F.col("_val"), F.col("_id").alias("_idb"), F.col("_h").alias("_hb")
-    )
-    cands = (
-        left.join(right, ["_band", "_val"])
-        .filter(F.col("_ida") < F.col("_idb"))
-        .select("_ida", "_idb", "_ha", "_hb")
-        .distinct()
+    # the hash rides through the kernel as a carried column (_ha/_hb),
+    # so the verify needs no join back to the hash table
+    cands = band_candidates(
+        h.withColumn("_bands", F.array(*[_band_val(b) for b in range(n_bands)]))
     )
     hamming = F.bit_count(F.expr("_ha ^ _hb"))
     return (

@@ -204,6 +204,21 @@ def hyperplane_lsh_bucket(
     return bucket
 
 
+def hyperplane_lsh_bands(
+    vec: Column, dim: int, n_planes: int, n_tables: int, seed: int = 42
+) -> Column:
+    """Array of ``n_tables`` independent sign-pattern buckets, table t
+    seeded ``seed + t`` — every table in ONE pass over the vectors (a
+    union of per-table branches would re-scan the corpus ``n_tables``
+    times).  Position t of the array is table t's bucket."""
+    return F.array(
+        *[
+            hyperplane_lsh_bucket(vec, dim, n_planes, seed=seed + t)
+            for t in range(n_tables)
+        ]
+    )
+
+
 def cosine_topk_lsh(
     corpus: DataFrame,
     queries: DataFrame,
@@ -224,9 +239,9 @@ def cosine_topk_lsh(
     quotient is the scan-pruning factor vs brute force.
 
     All tables' bucket assignments are computed in ONE pass over each
-    side (an array of (table, bucket) structs, exploded) — a union of
-    per-table branches would re-scan the corpus ``n_tables`` times,
-    which at 100 TB is the difference between one pass and four.
+    side (``hyperplane_lsh_bands``, exploded) — a union of per-table
+    branches would re-scan the corpus ``n_tables`` times, which at
+    100 TB is the difference between one pass and four.
     """
     c = _fan_out(
         corpus.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"))
@@ -234,20 +249,8 @@ def cosine_topk_lsh(
     q = queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
 
     def _banded(df, vcol):
-        tb = F.array(
-            *[
-                F.struct(
-                    F.lit(t).alias("_tbl"),
-                    hyperplane_lsh_bucket(
-                        F.col(vcol), dim, n_planes, seed=42 + t
-                    ).alias("_bkt"),
-                )
-                for t in range(n_tables)
-            ]
-        )
-        return df.select(
-            "*", F.explode(tb).alias("_tb")
-        ).select(*df.columns, "_tb._tbl", "_tb._bkt")
+        tables = hyperplane_lsh_bands(F.col(vcol), dim, n_planes, n_tables)
+        return df.select("*", F.posexplode(tables).alias("_tbl", "_bkt"))
 
     c_b = _banded(c, "_cv")
     q_b = _banded(q, "_qv")

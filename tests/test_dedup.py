@@ -105,6 +105,88 @@ def test_simhash_matches_bruteforce_hamming(spark):
     assert len(got) > 0  # the synthetic corpus does contain near-dups
 
 
+def test_band_candidates_matches_bruteforce(spark):
+    """The shared LSH kernel emits exactly the id pairs that share a
+    non-NULL value at the same band position: once per pair however
+    many bands collide, id_a < id_b, the pair predicate applied to each
+    band-join row BEFORE the distinct, and carried columns never change
+    the pair set."""
+    import itertools
+
+    bands = {
+        1: ["x", "p", "m"],
+        2: ["x", "p", "n"],  # shares bands 0 AND 1 with 1: one pair
+        3: ["y", "q", "m"],  # shares band 2 with 1
+        4: ["p", "x", "z"],  # 1's values at other positions: no pair
+        5: [None, "q", "o"],  # shares band 1 with 3
+        6: [None, "r", "o"],  # NULL band 0 never pairs; band 2 with 5
+        7: ["y", "q", "m"],  # identical to 3
+        8: [],  # empty band arrays never pair, not even with each other
+        9: [],
+    }
+    df = spark.createDataFrame(
+        [(i, b, 10 * i) for i, b in bands.items()], "_id long, _bands array<string>, _w long"
+    )
+
+    def shared(a, b):
+        return {k for k, (x, y) in enumerate(zip(bands[a], bands[b])) if x is not None and x == y}
+
+    expected = {(a, b) for a, b in itertools.combinations(sorted(bands), 2) if shared(a, b)}
+    assert (1, 2) in expected and (1, 4) not in expected and (5, 6) in expected
+
+    out = D.band_candidates(df)
+    assert out.columns == ["_ida", "_idb", "_wa", "_wb"]
+    rows = out.collect()
+    assert len(rows) == len(expected)  # a multi-band pair appears once
+    assert {(r["_ida"], r["_idb"]) for r in rows} == expected
+    assert all(r["_ida"] < r["_idb"] for r in rows)
+    assert all((r["_wa"], r["_wb"]) == (10 * r["_ida"], 10 * r["_idb"]) for r in rows)
+
+    bare = D.band_candidates(df.drop("_w"))
+    assert bare.columns == ["_ida", "_idb"]
+    assert {tuple(r) for r in bare.collect()} == expected
+
+    # a predicate over carried columns
+    heavy = D.band_candidates(df, F.col("_wa") + F.col("_wb") > 60)
+    assert {(r["_ida"], r["_idb"]) for r in heavy.collect()} == {
+        (a, b) for a, b in expected if 10 * a + 10 * b > 60
+    }
+    # the predicate sees each band-join row, before the distinct: pairs
+    # colliding ONLY on band 0 drop, pairs that also collide elsewhere stay
+    not_band0 = D.band_candidates(df, F.col("_band") != 0)
+    assert {(r["_ida"], r["_idb"]) for r in not_band0.collect()} == {
+        (a, b) for a, b in expected if shared(a, b) - {0}
+    }
+
+
+def test_minhash_bands_share_one_encoding(spark):
+    """The minhash pair path (band_candidates over _minhash_bands) and
+    the admission index rows (_band_rows) use one band encoding: the
+    kernel's pairs are exactly the pairs sharing an index (_band, _bh)
+    row, and carrying the token-set size ``_n`` changes nothing."""
+    import itertools
+
+    df = spark.createDataFrame(
+        [(1, "a b c"), (2, "c b a"), (3, "a b c d"), (4, "x y z"), (5, "x y z")],
+        ["doc_id", "text"],
+    )
+    t = D._token_sets(df, "doc_id", "text")
+    index = {}
+    for r in D._band_rows(t, 16, 2).collect():
+        index.setdefault(r["_id"], set()).add((r["_band"], r["_bh"]))
+    expected = {
+        (a, b) for a, b in itertools.combinations(sorted(index), 2) if index[a] & index[b]
+    }
+    assert {(1, 2), (4, 5)} <= expected
+
+    bare = D.band_candidates(D._minhash_bands(t, 16, 2))
+    assert {tuple(r) for r in bare.collect()} == expected
+    with_n = D.band_candidates(D._minhash_bands(t, 16, 2, "_n")).collect()
+    assert {(r["_ida"], r["_idb"]) for r in with_n} == expected
+    sizes = {1: 3, 2: 3, 3: 4, 4: 3, 5: 3}
+    assert all((r["_na"], r["_nb"]) == (sizes[r["_ida"]], sizes[r["_idb"]]) for r in with_n)
+
+
 def test_embedding_near_dup(spark):
     rows = [
         (1, [1.0, 0.0, 0.0]),

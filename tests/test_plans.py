@@ -99,6 +99,19 @@ def test_embedding_lsh_dedup_never_crossjoins(spark):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
 
 
+def test_simhash_has_one_band_self_join(spark):
+    """SimHash candidates come from ONE band_candidates self-join over
+    all four bands — not four per-band self-joins unioned — and the
+    fingerprints ride through it, so the Hamming verify needs no join
+    back to the fingerprint table."""
+    plan = _plan(spark, "dedup_simhash")
+    joins = re.findall(
+        r"(?:SortMergeJoin|ShuffledHashJoin|BroadcastHashJoin) \[([^\]]*)\]", plan
+    )
+    assert len([keys for keys in joins if keys.startswith("_band#")]) == 1, plan
+    assert len(joins) == 1, plan
+
+
 def test_ivf_broadcasts_centroids(spark):
     """Both IVF centroid passes (assignment + probing) must broadcast the
     centroid table, never shuffle the corpus against it."""

@@ -1,6 +1,6 @@
 """Tests for the r12 optimization internals: the parquet schema-inference
-memo (sources/tables._read_parquet), the LSH band-row ``keep_n`` column
-contract, and the ANN probe-side broadcast plan shapes."""
+memo (sources/tables._read_parquet) and the ANN probe-side broadcast
+plan shapes."""
 
 from __future__ import annotations
 
@@ -9,7 +9,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from eventbridge_etl_spark.operators import dedup as D
 from eventbridge_etl_spark.sources import tables as TT
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
@@ -74,24 +73,6 @@ def test_load_tables_results_identical_with_memo(spark):
     direct = spark.read.parquet(f"{SF_DIR}/customer.parquet")
     assert t1.schema == direct.schema == t2.schema
     assert sorted(map(tuple, t1.collect())) == sorted(map(tuple, direct.collect()))
-
-
-def test_band_rows_keep_n_contract(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c"), (2, "a b c d")], ["doc_id", "text"]
-    )
-    t = D._token_sets(df, "doc_id", "text")
-    bare = D._band_rows(t, 16, 2)
-    assert bare.columns == ["_id", "_band", "_bh"]
-    with_n = D._band_rows(t, 16, 2, keep_n=True)
-    assert with_n.columns == ["_id", "_n", "_band", "_bh"]
-    # _n matches the token-set size and the (id, band, bh) rows are
-    # identical to the bare form — keep_n must never change the banding
-    assert sorted(
-        map(tuple, bare.collect())
-    ) == sorted((r["_id"], r["_band"], r["_bh"]) for r in with_n.collect())
-    sizes = {r["_id"]: r["_n"] for r in with_n.collect()}
-    assert sizes == {1: 3, 2: 4}
 
 
 @pytest.mark.parametrize(
