@@ -64,8 +64,9 @@ def _fresh_cache(fn: Callable[[SparkSession, str], DataFrame]):
     """Release the PREVIOUS query's engine-persisted blocks before
     building the next plan.  Several operators persist an intermediate
     consumed twice within one action tree (tfidf weights, attribution
-    paths, n-gram tables); across a 205-query sweep in one long-lived
-    session those blocks would otherwise accumulate until LRU eviction.
+    paths, n-gram tables); across a full-registry sweep in one
+    long-lived session those blocks would otherwise accumulate until
+    LRU eviction.
 
     Scoped, not ``clearCache()``: only frames the engine itself
     persisted (tracked in ``eventbridge_etl_spark.cache``) are

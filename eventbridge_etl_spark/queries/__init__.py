@@ -29,7 +29,9 @@ Submodules group the inventory:
 
 from __future__ import annotations
 
+import json
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -53,114 +55,57 @@ def query(name: str, oracle: str | None = None):
     return deco
 
 
-#: Names promoted to the FRONT of the registration order.  The driver's
-#: correctness gate checks the first ~50 registered queries per round, so
-#: queries needing fresh verification (fixed since the last round, newly
-#: added, or never yet driver-checked) rotate into that window.  The
-#: tail of the list is a RE-CHECK QUOTA: previously-green queries cycled
-#: back through the window so no row's evidence goes more than two
-#: rounds stale (a regression in an early-green query would otherwise be
-#: invisible forever).  Names absent from the registry are skipped, so
-#: this list is safe across refactors.
-#:
-#: NOTE: ``QUERIES``/``ORACLES`` iteration order is only meaningful
-#: AFTER ``load_all()`` runs — it rebuilds both dicts in gate-priority
-#: order.  Anything importing the registries directly without calling
-#: ``load_all()`` sees plain module-import registration order.
-_GATE_PRIORITY: tuple[str, ...] = (
-    # ================= ROUND-13 WINDOW (positions 1-50) ================
-    # No never-checked gates this round (r12 drained rule 1) and no
-    # value-changed gates: every r13 engine change (minhash rep
-    # selection, semantic-dedup salting, q18 single-aggregate
-    # restructure, bfs truncation) is PROVABLY value-identical per the
-    # COVERAGE.md rule-2 procedure — byte-identical engine_hash digests
-    # at HEAD vs the pre-change worktree (sf0.01 via
-    # preclose_gate_check at close; sf0.1 and the /tmp/sf1 replica
-    # additionally recorded in OPTIMIZATION_r13.md) — so none consumes
-    # a slot (they re-enter at their normal staleness positions).  The
-    # window is therefore pure rule-3 rotation: the 18 r8-evidence rows
-    # pinned as this round's head by the r12 plan, then the 32 oldest
-    # r9-evidence rows in registration order.  The 16 r9 rows that do
-    # not fit are pinned below as the r14 overflow head.  After this
-    # drain the staleness ceiling is r9 (16 rows) — still at the
-    # ⌈216/50⌉ = 5-round arithmetic floor.
-    # --- 18 r8-evidence rows (the pinned r12 overflow, verbatim) ---
-    "text_collapse_runs",
-    "text_bigram_topk",
-    "sample_temperature",
-    "join_full_outer_coalesce",
-    "agg_mode_deterministic",
-    "set_intersect_all",
-    "set_except_all",
-    "window_nth_value",
-    "join_salted_skew",
-    "fuzzy_match_part_names",
-    "scd2_user_state",
-    "profile_orders",
-    "expect_orders_contract",
-    "rollup_incremental_merge",
-    "fn_bitwise_surface",
-    "events_outlier_iqr",
-    "agg_correlation",
-    "join_lateral_top2",
-    # --- 32 oldest r9-evidence rows, registration order ---
-    "dedup_tfidf_on_candidates",
-    "dedup_cluster_sizes",
-    "text_naive_bayes_lang",
-    "text_bm25_retrieval",
-    "graph_triangle_census",
-    "text_compression_ratio",
-    "multimodal_cdc_dedup",
-    "sample_weighted_pps",
-    "multimodal_phash_near_dup",
-    "agg_heavy_hitters",
-    "sample_leakage_safe_split",
-    "dedup_source_overlap",
-    "text_bigram_logprob",
-    "text_char_entropy",
-    "window_rolling_median",
-    "agg_chi_square_assoc",
-    "scd_snapshot_diff",
-    "expect_k_anonymity",
-    "sample_balanced_classes",
-    "dedup_incremental_admission",
-    "events_funnel_timed",
-    "dedup_containment_pairs",
-    "window_distribution",
-    "fn_generator_surface",
-    "expect_referential_integrity",
-    "q1_pricing_summary",
-    "agg_cube",
-    "agg_having",
-    "agg_distinct_count",
-    "q5_local_supplier_volume",
-    "window_topk_per_group",
-    "window_rank_dense",
-    # ============== OVERFLOW (position 51+) — LEADS ROUND 14 ===========
-    # The 16 remaining r9-evidence rows (registration order).  These
-    # MUST head the r14 window under the normal rotation.
-    "window_lag_gap",
-    "window_running_total",
-    "window_moving_avg",
-    "window_range_frame_30d",
-    "window_share_of_total",
-    "streaming_rollup_merge",
-    "streaming_ewma_smoothing",
-    "events_gap_fill",
-    "events_counter_increase",
-    "zorder_events_cluster",
-    "events_hopping_windows",
-    "events_time_hierarchy_rollup",
-    "events_value_histogram",
-    "events_dow_seasonality",
-    "events_rfm_segments",
-    "q11_important_parts",
-)
+#: The driver's correctness gate checks the first ``WINDOW`` registered
+#: queries per round.
+WINDOW = 50
+
+_REPO = Path(__file__).resolve().parents[2]
+#: Round-close ledger: ``digests`` (each gate's sf0.01 output md5) and
+#: ``changed`` (the round a gate's engine code or values last changed).
+LEDGER = _REPO / "data" / "gate_digests.json"
+
+
+def evidence(root: Path = _REPO) -> tuple[int, dict[str, int]]:
+    """``(next round, {gate: last round it MATCHed})`` read from the
+    committed driver artifacts ``CORRECTNESS_r<N>.json`` under ``root``.
+
+    A row is evidence only when rows, schema and hash all match.  The
+    next round is the latest artifact's round + 1."""
+    latest, last = 0, {}
+    for path in root.glob("CORRECTNESS_r*.json"):
+        tag = path.stem.removeprefix("CORRECTNESS_r")
+        if not tag.isdigit():
+            continue
+        rnd = int(tag)
+        latest = max(latest, rnd)
+        for gate, row in json.loads(path.read_text()).items():
+            if row["rows_match"] and row["schema_match"] and row["hash_match"]:
+                last[gate] = max(last.get(gate, 0), rnd)
+    return latest + 1, last
+
+
+def is_pending(gate: str, last: dict[str, int], changed: dict[str, int]) -> bool:
+    """Never driver-checked, or changed after its last MATCH."""
+    return gate not in last or changed.get(gate, 0) > last[gate]
+
+
+def rotation(
+    names: list[str], last: dict[str, int], changed: dict[str, int]
+) -> list[str]:
+    """Driver-window order: pending gates first, then the oldest
+    evidence first; never-checked gates lead the pending ones.  Ties
+    keep the order of ``names`` (the sort is stable)."""
+    return sorted(
+        names,
+        key=lambda g: (not is_pending(g, last, changed), last.get(g, 0)),
+    )
 
 
 def load_all() -> None:
-    """Import every query submodule (idempotent), then order the registry
-    so gate-priority names (see ``_GATE_PRIORITY``) come first."""
+    """Import every query submodule (idempotent), then order both
+    registries by ``rotation`` so the driver window checks pending and
+    stalest gates first.  Modules importing ``QUERIES``/``ORACLES``
+    without calling this see plain registration order."""
     from eventbridge_etl_spark.queries import (  # noqa: F401
         analytics_q,
         corpus_q,
@@ -176,9 +121,11 @@ def load_all() -> None:
         tpch_more,
     )
 
-    head = [n for n in _GATE_PRIORITY if n in QUERIES]
-    tail = [n for n in QUERIES if n not in set(head)]
+    _, last = evidence()
+    ledger = json.loads(LEDGER.read_text()) if LEDGER.exists() else {}
+    changed = ledger.get("changed", {})
+    order = rotation(list(QUERIES), last, changed)
     for reg in (QUERIES, ORACLES):
-        ordered = {n: reg[n] for n in head + tail if n in reg}
+        ordered = {n: reg[n] for n in order if n in reg}
         reg.clear()
         reg.update(ordered)

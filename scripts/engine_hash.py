@@ -1,12 +1,11 @@
 """Engine-only value hashes: one md5 per registry gate over its Spark
 output on a fixture, canonicalized by the shared comparator.
 
-The driver-window slot policy (COVERAGE.md §"Driver-window slot
-policy", rule 2) requires an empirical old-vs-new value-identity check
-for every gate whose engine code changed since its last driver check:
-run the gate at the OLD and NEW commits and compare outputs.  Sessions
-previously did this with ad-hoc one-off scripts; this is the durable
-form.  Typical use::
+A rewrite meant to be value-identical is proven so by running the gate
+at the OLD and NEW commits and comparing outputs; at round close the
+full-registry hashes feed ``scripts/preclose_gate_check.py``, which
+marks every gate whose digest changed as pending for the driver window
+(COVERAGE.md §"Driver-window rotation").  Typical use::
 
     # new side, at HEAD
     python scripts/engine_hash.py > /tmp/hash_new.txt
