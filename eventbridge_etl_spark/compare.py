@@ -2,7 +2,7 @@
 
 The single canonicalizer behind BOTH correctness gates — the pytest
 replica (tests/test_oracle_parity.py) and the standalone full-registry
-sweep (scripts/oracle_sweep.py).  They previously carried near-verbatim
+sweep (``scripts/verify.py sweep``).  They previously carried near-verbatim
 copies that drifted (review finding, round 7); any future normalization
 fix lands here once.
 

@@ -94,10 +94,11 @@ def rotation(
 ) -> list[str]:
     """Driver-window order: pending gates first, then the oldest
     evidence first; never-checked gates lead the pending ones.  Ties
-    keep the order of ``names`` (the sort is stable)."""
+    break by gate name, so the order does not depend on which query
+    module a process happened to import first."""
     return sorted(
         names,
-        key=lambda g: (not is_pending(g, last, changed), last.get(g, 0)),
+        key=lambda g: (not is_pending(g, last, changed), last.get(g, 0), g),
     )
 
 

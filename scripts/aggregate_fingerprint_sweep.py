@@ -40,9 +40,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import duckdb
+from verify import duck, m, session  # noqa: E402
 
 INTEGRAL = {"tinyint", "smallint", "int", "bigint", "long"}
 FLOATING = {"float", "double"}
@@ -97,23 +97,7 @@ def main() -> int:
     if not names:
         sys.exit("usage: aggregate_fingerprint_sweep.py <gate> [<gate> ...]")
 
-    from pyspark.sql import SparkSession
-
-    import __spark_entry__ as m
-
-    spark = (
-        SparkSession.builder.master(
-            os.environ.get("SWEEP_MASTER", "local[16]")
-        )
-        .config("spark.sql.shuffle.partitions",
-                os.environ.get("SWEEP_SHUF", "32"))
-        .config("spark.driver.memory",
-                os.environ.get("SWEEP_DRIVER_MEM", "24g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session("local[16]", "32", "24g")
     spark.sparkContext.setLogLevel("ERROR")
     qs = m.queries()
     oracles = m.oracle_sql()
@@ -121,32 +105,10 @@ def main() -> int:
     if unknown:
         sys.exit(f"not oracle-paired registry gates: {unknown}")
 
-    con = duckdb.connect()
-    con.execute(
-        f"SET memory_limit='{os.environ.get('DUCK_MEM', '24GB')}'"
-    )
-    # per-process spill dir with exit cleanup (same rationale as
-    # oracle_sweep's): without temp_directory DuckDB spills to cwd/.tmp
-    # — the r11 fp chunk filled the ROOT filesystem from inside the
-    # repo when the composed gate's sf0.5 oracle spilled >77 GiB
-    import atexit
-    import shutil
-
-    # DUCK_SPILL_DIR is a PARENT: spill goes into a per-PID subdir and
-    # only that subdir is removed at exit — rmtree'ing the env path
-    # itself would delete a user's shared scratch tree (ADVICE r11)
-    _spill = os.path.join(
-        os.environ.get("DUCK_SPILL_DIR", "/tmp"), f"duck_spill.{os.getpid()}"
-    )
-    con.execute(f"SET temp_directory='{_spill}'")
-    atexit.register(lambda: shutil.rmtree(_spill, ignore_errors=True))
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
-        )
+    # capped, with a per-process spill dir: without one DuckDB spills to
+    # cwd/.tmp — the r11 fp chunk filled the ROOT filesystem from inside
+    # the repo when the composed gate's sf0.5 oracle spilled >77 GiB
+    con = duck(sf)
 
     bad = 0
     for name in names:

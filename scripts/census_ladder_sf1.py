@@ -35,9 +35,9 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import duckdb
+from verify import duck, m, session  # noqa: E402
 
 SF = os.environ.get("SWEEP_SF", "/tmp/sf1")
 OUT = os.environ.get("CENSUS_OUT", "/tmp/census_sf1")
@@ -70,14 +70,7 @@ o AS (
 
 def main() -> int:
     os.makedirs(OUT, exist_ok=True)
-    con = duckdb.connect()
-    con.execute(f"SET memory_limit='{os.environ.get('DUCK_MEM', '24GB')}'")
-    spill = os.environ.get("DUCK_SPILL_DIR", f"/tmp/duck_spill.{os.getpid()}")
-    con.execute(f"SET temp_directory='{spill}'")
-    con.execute(
-        f"CREATE VIEW lineitem AS "
-        f"SELECT * FROM read_parquet('{SF}/lineitem.parquet')"
-    )
+    con = duck(SF)
     t0 = time.time()
     con.execute(
         f"COPY ({_PREFIX} SELECT src, dst, dd FROM o) "
@@ -121,19 +114,7 @@ def main() -> int:
     print("derived:", derived, flush=True)
     con.close()
 
-    from pyspark.sql import SparkSession
-
-    import __spark_entry__ as m
-
-    spark = (
-        SparkSession.builder.master(os.environ.get("SWEEP_MASTER", "local[16]"))
-        .config("spark.sql.shuffle.partitions", os.environ.get("SWEEP_SHUF", "32"))
-        .config("spark.driver.memory", os.environ.get("SWEEP_DRIVER_MEM", "24g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session("local[16]", "32", "24g")
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
     row = m.queries()["graph_triangle_census"](spark, SF).collect()[0]

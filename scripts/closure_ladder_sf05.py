@@ -42,12 +42,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import duckdb
-import pandas as pd
+import duckdb  # noqa: E402
+import pandas as pd  # noqa: E402
+from verify import duck, m, session  # noqa: E402
 
-from eventbridge_etl_spark.compare import frame_digest, normalize_frame
+from eventbridge_etl_spark.compare import frame_digest, normalize_frame  # noqa: E402
 
 SF = os.environ.get("SWEEP_SF", "/tmp/sf05")
 OUT = os.environ.get("CLOSURE_OUT", "/tmp/closure_sf05")
@@ -59,14 +60,7 @@ def build_pairs() -> str:
 
     os.makedirs(OUT, exist_ok=True)
     path = f"{OUT}/pairs.parquet"
-    con = duckdb.connect()
-    con.execute(f"SET memory_limit='{os.environ.get('DUCK_MEM', '24GB')}'")
-    spill = os.environ.get("DUCK_SPILL_DIR", f"/tmp/duck_spill.{os.getpid()}")
-    con.execute(f"SET temp_directory='{spill}'")
-    con.execute(
-        f"CREATE VIEW documents AS "
-        f"SELECT * FROM read_parquet('{SF}/documents.parquet')"
-    )
+    con = duck(SF)
     t0 = time.time()
     con.execute(
         f"COPY (WITH {_MINHASH_CTES}, pairs AS ({_MINHASH_VERIFY}) "
@@ -150,19 +144,7 @@ def oracle_frames(pairs_path: str) -> dict[str, pd.DataFrame]:
 
 
 def engine_frames(names) -> dict[str, pd.DataFrame]:
-    from pyspark.sql import SparkSession
-
-    import __spark_entry__ as m
-
-    spark = (
-        SparkSession.builder.master(os.environ.get("SWEEP_MASTER", "local[16]"))
-        .config("spark.sql.shuffle.partitions", os.environ.get("SWEEP_SHUF", "32"))
-        .config("spark.driver.memory", os.environ.get("SWEEP_DRIVER_MEM", "24g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session("local[16]", "32", "24g")
     spark.sparkContext.setLogLevel("ERROR")
     qs = m.queries()
     out = {}

@@ -34,10 +34,10 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from aggregate_fingerprint_sweep import _canon, _specs  # noqa: E402
+from verify import m, session  # noqa: E402
 
 
 def main() -> int:
@@ -46,19 +46,7 @@ def main() -> int:
     if not names:
         sys.exit("usage: engine_scale_probe.py <gate> [<gate> ...]")
 
-    from pyspark.sql import SparkSession
-
-    import __spark_entry__ as m
-
-    spark = (
-        SparkSession.builder.master(os.environ.get("SWEEP_MASTER", "local[16]"))
-        .config("spark.sql.shuffle.partitions", os.environ.get("SWEEP_SHUF", "32"))
-        .config("spark.driver.memory", os.environ.get("SWEEP_DRIVER_MEM", "24g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session("local[16]", "32", "24g")
     spark.sparkContext.setLogLevel("ERROR")
     qs = m.queries()
     unknown = [n for n in names if n not in qs]

@@ -27,11 +27,11 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-import duckdb
+from verify import duck, m, session  # noqa: E402
 
-from eventbridge_etl_spark.compare import digest_expr, frame_digest
+from eventbridge_etl_spark.compare import digest_expr, frame_digest  # noqa: E402
 
 SF = os.environ.get("SWEEP_SF", "/tmp/sf1")
 K = int(os.environ.get("PAIRS_K", "16"))
@@ -45,14 +45,7 @@ TAGS = ("i", "i", "f")
 def oracle_digest() -> tuple:
     from eventbridge_etl_spark.queries.llm import _MINHASH_CTES, _MINHASH_VERIFY
 
-    con = duckdb.connect()
-    con.execute(f"SET memory_limit='{os.environ.get('DUCK_MEM', '24GB')}'")
-    spill = os.environ.get("DUCK_SPILL_DIR", f"/tmp/duck_spill.{os.getpid()}")
-    con.execute(f"SET temp_directory='{spill}'")
-    con.execute(
-        f"CREATE VIEW documents AS "
-        f"SELECT * FROM read_parquet('{SF}/documents.parquet')"
-    )
+    con = duck(SF)
     # chunk the candidate self-join on the LEFT doc id: every pair has
     # exactly one id_a, so the chunks partition the pairs output
     anchor = "AND a.doc_id < b.doc_id"
@@ -90,19 +83,7 @@ def oracle_digest() -> tuple:
 
 
 def engine_digest() -> tuple:
-    from pyspark.sql import SparkSession
-
-    import __spark_entry__ as m
-
-    spark = (
-        SparkSession.builder.master(os.environ.get("SWEEP_MASTER", "local[16]"))
-        .config("spark.sql.shuffle.partitions", os.environ.get("SWEEP_SHUF", "64"))
-        .config("spark.driver.memory", os.environ.get("SWEEP_DRIVER_MEM", "48g"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = session("local[16]", "64", "48g")
     spark.sparkContext.setLogLevel("ERROR")
     t0 = time.time()
     got = m.queries()["dedup_minhash_lsh"](spark, SF).toPandas()

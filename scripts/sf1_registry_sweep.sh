@@ -35,7 +35,7 @@ run_chunk() {
   # fallback to the canonical sort for unsupported dtypes.
   SWEEP_SF=$SF SWEEP_MASTER=local[16] SWEEP_SHUF=32 SWEEP_DRIVER_MEM=24g \
     SWEEP_PINNED_SKIP=1 SWEEP_HASH=1 SWEEP_ONLY=$only \
-    timeout 3600 python scripts/oracle_sweep.py >"$LOGDIR/$name.log" 2>"$LOGDIR/$name.err"
+    timeout 3600 python scripts/verify.py sweep >"$LOGDIR/$name.log" 2>"$LOGDIR/$name.err"
   echo "chunk $name rc=$? $(date +%T)"
   tail -3 "$LOGDIR/$name.log"
 }

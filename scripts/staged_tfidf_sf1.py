@@ -40,27 +40,13 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from verify import session  # noqa: E402
 
 TAU = 0.8
 NUM_HASHES = 16
 BANDS = 2
-
-
-def _spark():
-    from pyspark.sql import SparkSession
-
-    return (
-        SparkSession.builder.master(os.environ.get("SWEEP_MASTER", "local[16]"))
-        .config("spark.sql.shuffle.partitions", os.environ.get("SWEEP_SHUF", "64"))
-        .config("spark.driver.memory", os.environ.get("SWEEP_DRIVER_MEM", "48g"))
-        .config("spark.local.dir", os.environ.get("STAGE_SCRATCH", "/tmp/stage_scratch"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
 
 
 def main() -> int:
@@ -74,7 +60,9 @@ def main() -> int:
     from eventbridge_etl_spark.operators import dedup as D
     from eventbridge_etl_spark.sources.tables import load_tables
 
-    spark = _spark()
+    spark = session("local[16]", "64", "48g", conf={
+        "spark.local.dir": os.environ.get("STAGE_SCRATCH", "/tmp/stage_scratch"),
+    })
     spark.sparkContext.setLogLevel("ERROR")
     doc = load_tables(spark, sf, ("documents",))["documents"]
     t0 = time.time()

@@ -5,7 +5,7 @@ is impossible to miss.
 
 Parses every line shape the three sweep scripts actually emit:
 
-- oracle_sweep.py:       ``name MATCH 12.3s`` / ``name rows-only N 12.3s``
+- verify.py sweep:       ``name MATCH 12.3s`` / ``name rows-only N 12.3s``
                          / ``name MISMATCH cols=... first=[...]`` (no
                          trailing duration) / ``name ERROR repr(e)`` /
                          ``name ORACLE-ERROR repr(e)`` / ``name

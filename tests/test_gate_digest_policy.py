@@ -2,7 +2,7 @@
 
 The full value check (run every gate, diff digests against
 ``data/gate_digests.json``) needs a ~15-minute Spark pass and lives in
-``scripts/preclose_gate_check.py`` — mandatory at round close.  These
+``scripts/verify.py hash`` / ``close`` — mandatory at round close.  These
 tests are the fast invariants that hold the mechanism together between
 closes: the ledger must track the registry exactly (a stamped or
 ``changed`` gate must still exist; an unstamped gate must sit in the
@@ -17,6 +17,7 @@ from __future__ import annotations
 import importlib
 import json
 import os
+import subprocess
 import sys
 
 from eventbridge_etl_spark import queries
@@ -25,7 +26,7 @@ from eventbridge_etl_spark.queries import WINDOW
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 BASELINE = os.path.join(REPO, "data", "gate_digests.json")
 
-#: Rewrites that only the local engine_hash check backed at the r13
+#: Rewrites that only the local engine-hash check backed at the r13
 #: close; the ledger keeps them pending until a driver round confirms.
 CARRIED_OVER = (
     "q18_large_volume_customer",
@@ -45,7 +46,7 @@ def _registry():
 
 def _checker():
     sys.path.insert(0, os.path.join(REPO, "scripts"))
-    return importlib.import_module("preclose_gate_check")
+    return importlib.import_module("verify")
 
 
 def _changed():
@@ -69,7 +70,7 @@ def test_baseline_tracks_registry_exactly():
     assert not outside, (
         f"gates with no baseline digest outside the window head: "
         f"{outside} — new gates must take a window slot and be stamped "
-        f"at round close (scripts/preclose_gate_check.py --stamp)"
+        f"at round close (scripts/verify.py close --stamp)"
     )
 
     # digest values look like md5 hex — a truncated/garbled stamp file
@@ -106,9 +107,9 @@ def _artifact(root, rnd, rows):
 def test_rotation_rule_on_synthetic_evidence(tmp_path):
     names = ["g", "a", "b", "c", "d", "e", "f"]
 
-    # no artifacts: nothing is evidence, so registration order
+    # no artifacts: nothing is evidence, so name order
     assert queries.evidence(tmp_path) == (1, {})
-    assert queries.rotation(names, {}, {}) == names
+    assert queries.rotation(names, {}, {}) == sorted(names)
 
     _artifact(tmp_path, 1, {"a": True, "b": True, "c": True, "d": True})
     # a and e fail in r2: a keeps its r1 evidence, e has none
@@ -128,10 +129,36 @@ def test_rotation_rule_on_synthetic_evidence(tmp_path):
         "b", "e", "f"
     ]
     # never-checked, then changed-after-check, then stalest first with
-    # r1 ties in registration order; g's fresh r2 evidence goes last
+    # r1 ties by name; g's fresh r2 evidence goes last
     assert queries.rotation(names, last, changed) == [
         "e", "f", "b", "a", "c", "d", "g"
     ]
+
+
+def _registry_order(pre_imports):
+    """The registry order a fresh process sees after importing
+    ``pre_imports`` (query submodules) before ``__spark_entry__``."""
+    code = "".join(
+        f"import eventbridge_etl_spark.queries.{mod}\n" for mod in pre_imports
+    ) + (
+        "import __spark_entry__\n"
+        "from eventbridge_etl_spark.queries import QUERIES\n"
+        "print(','.join(QUERIES))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=REPO, capture_output=True,
+        text=True, check=True,
+    ).stdout
+    return out.strip().split(",")
+
+
+def test_rotation_is_independent_of_import_order():
+    fresh = _registry_order(())
+    reordered = _registry_order(("tpch_more", "timeseries_q"))
+    assert reordered == fresh, (
+        f"window differs by import order: "
+        f"{sorted(set(fresh[:WINDOW]) ^ set(reordered[:WINDOW]))}"
+    )
 
 
 def test_load_all_is_idempotent():
@@ -170,7 +197,7 @@ def test_window_moves_past_the_latest_round():
     )
 
 
-def _base(tmp_path, monkeypatch, chk, changed=None):
+def _base(tmp_path, monkeypatch, changed=None):
     doc = {
         "_meta": {"stamped_round": "test"},
         "changed": changed or {},
@@ -178,9 +205,9 @@ def _base(tmp_path, monkeypatch, chk, changed=None):
     }
     bp = tmp_path / "base.json"
     bp.write_text(json.dumps(doc))
-    monkeypatch.setattr(chk, "BASELINE", str(bp))
+    monkeypatch.setattr(queries, "LEDGER", bp)
     monkeypatch.setattr(
-        chk, "evidence", lambda: (5, {"g_a": 4, "g_b": 4, "g_c": 3})
+        queries, "evidence", lambda: (5, {"g_a": 4, "g_b": 4, "g_c": 3})
     )
     return bp
 
@@ -193,13 +220,13 @@ def _hashes(tmp_path, name, lines):
 
 def test_checker_stamp_rewrites_baseline(tmp_path, monkeypatch):
     chk = _checker()
-    bp = _base(tmp_path, monkeypatch, chk, changed={"g_c": 2})
+    bp = _base(tmp_path, monkeypatch, changed={"g_c": 2})
     same = {"g_a": "a" * 32, "g_b": "b" * 32, "g_c": "c" * 32}
 
     # --stamp records changed = next round for the differing gate only
     # and keeps the older ledger entries
     hf = _hashes(tmp_path, "one.txt", {**same, "g_a": "d" * 32})
-    assert chk.main([hf, "--stamp"]) == 0
+    assert chk.main(["close", hf, "--stamp"]) == 0
     doc = json.load(open(bp))
     assert doc["changed"] == {"g_a": 5, "g_c": 2}
     assert doc["_meta"]["stamped_round"] == 5
@@ -209,30 +236,34 @@ def test_checker_stamp_rewrites_baseline(tmp_path, monkeypatch):
 def test_checker_flags_out_of_window_changes(tmp_path, monkeypatch):
     chk = _checker()
     same = {"g_a": "a" * 32, "g_b": "b" * 32, "g_c": "c" * 32}
-    monkeypatch.setattr(chk, "WINDOW", 1)
+    monkeypatch.setattr(queries, "WINDOW", 1)
 
     # one pending gate fits a one-slot window
-    _base(tmp_path, monkeypatch, chk)
-    assert chk.main([_hashes(tmp_path, "a.txt", {**same, "g_a": "d" * 32})]) == 0
+    _base(tmp_path, monkeypatch)
+    hf = _hashes(tmp_path, "a.txt", {**same, "g_a": "d" * 32})
+    assert chk.main(["close", hf]) == 0
     # more pending gates than the window holds: fatal, nothing stamped
-    bp = _base(tmp_path, monkeypatch, chk)
+    bp = _base(tmp_path, monkeypatch)
     hf = _hashes(tmp_path, "ab.txt", {**same, "g_a": "d" * 32, "g_b": "e" * 32})
-    assert chk.main([hf, "--stamp"]) == 1
+    assert chk.main(["close", hf, "--stamp"]) == 1
     assert json.load(open(bp))["changed"] == {}
     # a pending ledger entry or a new (never-checked) gate counts too
-    _base(tmp_path, monkeypatch, chk, changed={"g_c": 5})
-    assert chk.main([_hashes(tmp_path, "l.txt", {**same, "g_a": "d" * 32})]) == 1
-    _base(tmp_path, monkeypatch, chk)
-    assert chk.main([_hashes(tmp_path, "n.txt", {**same, "g_new": "f" * 32})]) == 0
+    _base(tmp_path, monkeypatch, changed={"g_c": 5})
+    hf = _hashes(tmp_path, "l.txt", {**same, "g_a": "d" * 32})
+    assert chk.main(["close", hf]) == 1
+    _base(tmp_path, monkeypatch)
+    hf = _hashes(tmp_path, "n.txt", {**same, "g_new": "f" * 32})
+    assert chk.main(["close", hf]) == 0
     hf = _hashes(tmp_path, "an.txt", {**same, "g_a": "d" * 32, "g_new": "f" * 32})
-    assert chk.main([hf]) == 1
+    assert chk.main(["close", hf]) == 1
 
     # an ERROR line or a vanished gate: fatal even with room in the
     # window (a crash must not read as "no diff")
-    monkeypatch.setattr(chk, "WINDOW", WINDOW)
+    monkeypatch.setattr(queries, "WINDOW", WINDOW)
     hf = tmp_path / "err.txt"
     hf.write_text(
         f"g_a ERROR SomeException: boom\ng_b {'b' * 32}\ng_c {'c' * 32}\n"
     )
-    assert chk.main([str(hf)]) == 1
-    assert chk.main([_hashes(tmp_path, "vanish.txt", {"g_a": "a" * 32})]) == 1
+    assert chk.main(["close", str(hf)]) == 1
+    hf = _hashes(tmp_path, "vanish.txt", {"g_a": "a" * 32})
+    assert chk.main(["close", hf]) == 1

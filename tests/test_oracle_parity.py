@@ -29,7 +29,7 @@ def duck():
     con.close()
 
 
-# The canonicalizer is shared with scripts/oracle_sweep.py — one
+# The canonicalizer is shared with scripts/verify.py sweep — one
 # comparator for both correctness gates (see compare.py's design notes)
 from eventbridge_etl_spark.compare import normalize_frame as normalize  # noqa: E402
 

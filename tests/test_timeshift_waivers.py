@@ -1,7 +1,7 @@
 """CI pin for the four timeshift streaming waivers (VERDICT r9 #7).
 
-``run_battery.py`` already runs ``scripts/timeshift_waiver_check.py``
-after the timeshift sweep, but the battery is a manual command — a
+``scripts/verify.py battery`` already runs ``verify.py waivers`` after
+the timeshift sweep, but the battery is a manual command — a
 waiver drifting (a code change that alters WHAT the watermark drops, or
 a fixture change that moves the straddle band) would only surface on
 the next battery run.  This test makes the derived-set assertion part
@@ -10,9 +10,9 @@ clean sf0.01 corpus, then require the checker's full DERIVED-MATCH —
 each waived gate's divergence must EQUAL the epoch-watermark late-drop
 derivation, not merely be drop-only.
 
-Subprocess on purpose: the checker owns its SparkSession config
-(mirroring oracle_sweep's) and must keep working as the standalone
-battery step; CI just pins its exit code.
+Subprocess on purpose: the checker owns its SparkSession config (the
+sweep's) and must keep working as the standalone battery step; CI just
+pins its exit code.
 """
 
 from __future__ import annotations
@@ -45,7 +45,8 @@ def test_timeshift_waivers_derive_exactly(timeshift_dir):
     proc = subprocess.run(
         [
             sys.executable,
-            "scripts/timeshift_waiver_check.py",
+            "scripts/verify.py",
+            "waivers",
             str(timeshift_dir),
         ],
         capture_output=True,

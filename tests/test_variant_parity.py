@@ -1,6 +1,6 @@
 """Canary oracle parity on the generated fixture VARIANTS.
 
-The full seven-surface sweep (scripts/oracle_sweep.py × clean / adv /
+The full seven-surface sweep (scripts/verify.py sweep × clean / adv /
 empty / signmag / timeshift / longtext / unicode) is a manual,
 ~90-minute battery; CI cannot afford it.  But the two variant classes
 round 7 session 4 fixed — the Unicode trim/lower tokenizer alignment
