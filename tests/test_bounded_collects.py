@@ -1,14 +1,15 @@
 """Whitelist pin for driver-side materialization (VERDICT r8 item 7).
 
-The engine's 100 TB contract allows a ``.collect()``/``.toPandas()``
-ONLY when the collected frame is provably k- or bucket-bounded.  The
+The engine's 100 TB contract allows a ``.collect()``/``.toPandas()``, or
+a driver read of an ``Observation``'s metrics (``.get[...]``), ONLY when
+the collected frame or metric is provably k- or bucket-bounded.  The
 three sanctioned sites are pinned here IN BOTH DIRECTIONS, the same way
 test_registry_plan_audit pins the one sanctioned cross join:
 
 - a NEW collect anywhere in the package fails (no unbounded driver
   materialization can sneak in), and
 - a sanctioned site losing its bounding construct (the ``.limit(k)``,
-  the ``groupBy("cluster")``, the bucket-id ``.distinct()``) fails too,
+  the ``groupBy("cluster")``, the bucket-id ``collect_set``) fails too,
   so the sanction cannot silently outlive its justification.
 
 Queries modules are exempt from the scan: they only build DataFrames
@@ -27,8 +28,8 @@ PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
 #: (relpath, bounding construct that must appear within the 8 lines
 #: BEFORE the collect, bound documented)
 SANCTIONED = [
-    ("operators/upsert.py", r"\.select\(self\.BUCKET_COL\)\.distinct\(\)",
-     "rows <= NUM_BUCKETS (bucket ids of the incoming batch)"),
+    ("operators/upsert.py", r"F\.collect_set\(self\.BUCKET_COL\)",
+     "observed set <= n_buckets values (bucket ids of the incoming batch)"),
     ("operators/similarity.py", r"\.limit\(k\)",
      "kmeans_init: exactly k rows by construction"),
     ("operators/similarity.py", r'\.groupBy\("cluster"\)',
@@ -40,7 +41,7 @@ SANCTIONED = [
      "subspace x surviving cluster x position)"),
 ]
 
-COLLECT_RE = re.compile(r"\.collect\(\)|\.toPandas\(\)")
+COLLECT_RE = re.compile(r"\.collect\(\)|\.toPandas\(\)|\.get\[")
 
 
 def _collect_sites() -> list[tuple[str, int, str]]:
