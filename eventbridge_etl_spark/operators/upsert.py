@@ -75,7 +75,10 @@ class KeyedParquetStore:
     batch touches: B·(1−(1−1/B)^n) of B for n random keys (61 of 64 at
     n = 200).  The merge is one shuffle on the bucket id into
     min(touched, defaultParallelism) writer tasks, so every core writes
-    buckets and each touched bucket is still rewritten as one file.
+    buckets and each touched bucket is still rewritten as one file.  A
+    rewritten bucket is a directory, a part file and its ``.crc``; in a
+    ``local[...]`` session each costs only syscalls, no process
+    (``session`` module docstring).
     """
 
     BUCKET_COL = "_kb"

@@ -10,6 +10,7 @@ Usage::
     python scripts/verify.py battery     # fixtures + 7 sweeps + waivers + suite
     python scripts/verify.py close <hash file> [--stamp]   # round close
     python scripts/verify.py waivers [<timeshift fixture dir>]
+    python scripts/verify.py jar [--check]
 
 ``sweep`` checks the ``__spark_entry__.py`` contract end to end: fresh
 process, ``entry()`` first, then each oracle-paired gate compared
@@ -45,6 +46,11 @@ rotation").
 
 ``waivers`` derives the four timeshift streaming divergences from the
 epoch-0 initial watermark and fails unless each equals its derivation.
+
+``jar`` rebuilds the local FileSystem jar the engine's local JVMs load
+(``eventbridge_etl_spark/jvm/``) from its source with ``javac --release
+17`` against the installed pyspark jars; ``--check`` only compares the
+rebuilt classes with the committed jar and exits 1 on any difference.
 
 Environment: ``SWEEP_SF`` (fixture dir, default clean sf0.01),
 ``SWEEP_MASTER`` (default ``local[8]``), ``SWEEP_SHUF`` (shuffle
@@ -623,6 +629,42 @@ def close(hash_file, stamp) -> int:
     return 0
 
 
+def jar(check) -> int:
+    """Rebuild the local FileSystem jar from its source, or with ``check``
+    compare the rebuilt classes with the committed jar."""
+    import tempfile
+    import zipfile
+
+    import pyspark
+
+    from eventbridge_etl_spark.session import LOCAL_FS_JAR
+
+    src = os.path.join(os.path.dirname(LOCAL_FS_JAR), "LocalFileSystem.java")
+    cp = os.path.join(os.path.dirname(pyspark.__file__), "jars", "*")
+    built = {}
+    with tempfile.TemporaryDirectory() as out:
+        subprocess.run(["javac", "--release", "17", "-nowarn", "-cp", cp, "-d", out, src],
+                       check=True)
+        for root, _, files in os.walk(out):
+            for name in files:
+                path = os.path.join(root, name)
+                with open(path, "rb") as fh:
+                    built[os.path.relpath(path, out)] = fh.read()
+    if check:
+        with zipfile.ZipFile(LOCAL_FS_JAR) as zf:
+            committed = {n: zf.read(n) for n in zf.namelist()}
+        drift = sorted(n for n in built.keys() | committed.keys()
+                       if built.get(n) != committed.get(n))
+        print(f"jar drift: {drift}" if drift else f"{LOCAL_FS_JAR} matches its source")
+        return 1 if drift else 0
+    # fixed entry order and timestamps: the same classes give the same jar
+    with zipfile.ZipFile(LOCAL_FS_JAR, "w") as zf:
+        for name in sorted(built):
+            zf.writestr(zipfile.ZipInfo(name, (1980, 1, 1, 0, 0, 0)), built[name])
+    print(f"wrote {LOCAL_FS_JAR} ({len(built)} classes)")
+    return 0
+
+
 def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     sub = ap.add_subparsers(dest="cmd", required=True)
@@ -642,6 +684,9 @@ def main(argv=None) -> int:
     c.add_argument("--stamp", action="store_true", help="rewrite the ledger")
     w = sub.add_parser("waivers", help="derive the timeshift streaming waivers")
     w.add_argument("sf", nargs="?", default="/tmp/advfix/timeshift")
+    j = sub.add_parser("jar", help="rebuild the local FileSystem jar from its source")
+    j.add_argument("--check", action="store_true",
+                   help="compare with the committed jar instead of writing it")
     args = ap.parse_args(argv)
     if args.cmd == "sweep":
         return sweep()
@@ -651,6 +696,8 @@ def main(argv=None) -> int:
         return battery(args)
     if args.cmd == "close":
         return close(args.hash_file, args.stamp)
+    if args.cmd == "jar":
+        return jar(args.check)
     return waivers(args.sf)
 
 
