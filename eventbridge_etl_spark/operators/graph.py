@@ -238,7 +238,6 @@ def bfs_hops(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 3,
-    checkpoint_every: int | None = None,
 ) -> DataFrame:
     """Minimum hop distance from a source node SET over a directed edge
     list, as ``max_hops`` unrolled frontier expansions — the same
@@ -260,13 +259,13 @@ def bfs_hops(
     embeds every earlier level's — measured growth is combinatorial
     (this operator at 3 hops: ~1.4k formatted-plan lines; 6 hops: 24k;
     10 hops: 1.13M lines and 93 s of pure driver-side planning).
-    Every ``checkpoint_every`` levels both frames are cut with a LAZY
+    Every 4th level both frames are cut with a LAZY
     ``localCheckpoint`` (plan becomes a leaf immediately; blocks
     materialize on first action), bounding plan size linearly in
     depth (10 hops: 678 lines, 17 s — 5.5x, and the gap widens
     super-exponentially past that).  Creating a checkpoint physically
     plans its prefix, so at SHALLOW depths truncation costs more than
-    it saves (measured: 6 hops 3.2 s → 18.5 s); the default is
+    it saves (measured: 6 hops 3.2 s → 18.5 s); truncation is
     therefore ADAPTIVE — off for ``max_hops`` <= 8 (the swept depth of
     3 keeps byte-identical plans and results), every 4 levels beyond.
     Deep traversals trade the checkpoint's executor-local block
@@ -276,8 +275,6 @@ def bfs_hops(
     their lifetime is bound to garbage collection — Spark's
     ContextCleaner drops them once the checkpointed RDDs are collected.
     """
-    if checkpoint_every is None:
-        checkpoint_every = 4 if max_hops > 8 else 0
     # the edge list is read once per unrolled level: persist it so an
     # expensive upstream (window + aggregate + distinct for transition
     # edges) computes once instead of max_hops times — the same reuse
@@ -299,7 +296,7 @@ def bfs_hops(
         )
         dist = dist.unionByName(nxt.select("node", F.lit(h).alias("hop")))
         frontier = nxt
-        if checkpoint_every and h % checkpoint_every == 0 and h < max_hops:
+        if max_hops > 8 and h % 4 == 0 and h < max_hops:
             dist = dist.localCheckpoint(eager=False)
             frontier = frontier.localCheckpoint(eager=False)
     return dist.groupBy("node").agg(F.min("hop").alias("hops"))

@@ -58,11 +58,19 @@ def upsert_by_key(
     """
     if version_col is None:
         return df.dropDuplicates(list(keys))
-    others = [c for c in df.columns if c not in keys]
+    return _latest_per_key(df, list(keys), F.struct(F.col(version_col)))
+
+
+def _latest_per_key(
+    df: DataFrame, keys: list[str], version, drop: Sequence[str] = ()
+) -> DataFrame:
+    """One row per ``keys``: the row with the largest ``version``.
+
+    The non-key columns (less ``drop``) travel as one struct through a
+    single ``max_by``, then are unpacked under their own names."""
+    others = [c for c in df.columns if c not in keys and c not in drop]
     row = F.struct(*[F.col(c) for c in others])
-    agg = df.groupBy(*[F.col(k) for k in keys]).agg(
-        F.max_by(row, F.struct(F.col(version_col))).alias("_r")
-    )
+    agg = df.groupBy(*keys).agg(F.max_by(row, version).alias("_r"))
     return agg.select(*keys, *[F.col(f"_r.{c}").alias(c) for c in others])
 
 
@@ -240,8 +248,6 @@ class KeyedParquetStore:
                 if version_col
                 else F.col("_is_new")
             )
-            others = [c for c in merged.columns if c not in self.keys + [self.BUCKET_COL, "_is_new"]]
-            row = F.struct(*[F.col(c) for c in others])
             # The only shuffle: hash on the bucket id, which already
             # satisfies the per-key aggregate's distribution, so each
             # bucket lands whole in one task and is written as one file.
@@ -249,11 +255,11 @@ class KeyedParquetStore:
             # shrinks an uncounted repartition of a batch this small to ONE
             # writer task, which writes every touched bucket serially.
             n_writers = min(len(touched), spark.sparkContext.defaultParallelism)
-            resolved = (
-                merged.repartition(n_writers, self.BUCKET_COL)
-                .groupBy(self.BUCKET_COL, *self.keys)
-                .agg(F.max_by(row, version).alias("_r"))
-                .select(self.BUCKET_COL, *self.keys, *[F.col(f"_r.{c}").alias(c) for c in others])
+            resolved = _latest_per_key(
+                merged.repartition(n_writers, self.BUCKET_COL),
+                [self.BUCKET_COL, *self.keys],
+                version,
+                drop=["_is_new"],
             )
             # Stage to a unique tmp dir (no cross-writer races on a shared
             # path), then publish each touched bucket with two renames: old

@@ -9,13 +9,11 @@ from eventbridge_etl_spark.streaming.file_pipeline import (
     windowed_counts,
 )
 from eventbridge_etl_spark.streaming.observe import (
-    CollectingListener,
     audit_union,
     with_observe,
 )
 
 __all__ = [
-    "CollectingListener",
     "audit_union",
     "dedup_within_watermark",
     "sessionize",

@@ -16,7 +16,7 @@ Reference-parity map:
 - foreachBatch upsert   = DynamoDB keyed PutItem (O16): per-epoch
   idempotent bucket rewrites => effectively-once end to end.
 - observe/audit         = the wildcard observe tap (O19) + X-Ray style
-  progress metrics (O22) via StreamingQueryListener.
+  progress metrics (O22) via QueryProgress.observedMetrics.
 
 At scale: the file source lists incrementally (no full re-scan),
 watermark state is bounded by (watermark horizon x key cardinality), and

@@ -9,17 +9,12 @@ annotates spans with X-Ray.  Here:
   Lambda saw, minus the per-event Lambda invocation).
 - ``with_observe``      — ``df.observe``: named accumulator metrics
   evaluated inside the running plan, surfaced per micro-batch in
-  ``QueryProgress.observedMetrics`` — counters without a second scan.
-- ``CollectingListener``— ``StreamingQueryListener`` capturing progress
-  (rows/sec, batch durations, observed metrics): the X-Ray substitute,
-  feeding dashboards or the reconciliation check (README.md:27 —
-  extracted count == loaded count)."""
+  ``QueryProgress.observedMetrics`` — counters without a second scan."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQueryListener
 
 
 def audit_union(*stages: tuple[str, DataFrame]) -> DataFrame:
@@ -51,33 +46,3 @@ def with_observe(
         for c in null_cols
     ]
     return df.observe(name, *metrics)
-
-
-class CollectingListener(StreamingQueryListener):
-    """Captures per-batch progress for assertions/monitoring."""
-
-    def __init__(self) -> None:
-        self.progress: list[dict] = []
-        self.started: list[str] = []
-        self.terminated: list[str] = []
-
-    def onQueryStarted(self, event) -> None:
-        self.started.append(event.id)
-
-    def onQueryProgress(self, event) -> None:
-        p = event.progress
-        self.progress.append(
-            {
-                "batchId": p.batchId,
-                "numInputRows": p.numInputRows,
-                "observedMetrics": {
-                    k: v.asDict() for k, v in (p.observedMetrics or {}).items()
-                },
-            }
-        )
-
-    def onQueryTerminated(self, event) -> None:
-        self.terminated.append(event.id)
-
-    def onQueryIdle(self, event) -> None:  # pragma: no cover
-        pass

@@ -235,7 +235,7 @@ def test_deep_unroll_checkpointing_is_result_identical(spark):
     """The r13 lazy-localCheckpoint plan truncation (bfs, adaptive:
     every 4 levels once max_hops > 8) must not change results at
     depths where it triggers.  Checked against an exact Python BFS
-    rather than the checkpoint_every=0 unroll — at depth 10 the
+    rather than an untruncated unroll — at depth 10 the
     UNTRUNCATED plan is the >1M-line / minutes-of-planning pathology
     the truncation exists to remove, far too slow for CI."""
     import collections

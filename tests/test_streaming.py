@@ -4,6 +4,8 @@ windows, streaming dedup, sessionization, and the observe tap."""
 
 from __future__ import annotations
 
+import contextlib
+import json
 import os
 import shutil
 
@@ -970,14 +972,32 @@ def test_keyed_store_rejects_param_drift_and_reserved_columns(spark, tmp_path):
     assert os.path.isfile(sidecar)
 
 
+@contextlib.contextmanager
+def state_store(spark, provider):
+    """Run the block under ``provider`` ("default" or "rocksdb").
+
+    providerClass is a runtime SQL conf read at QUERY start (a fresh
+    checkpoint pins it), so the suite session can flip it per test."""
+    from eventbridge_etl_spark.session import ROCKSDB_CONF
+
+    conf = ROCKSDB_CONF if provider == "rocksdb" else {}
+    prior = {key: spark.conf.get(key, None) for key in conf}
+    for key, val in conf.items():
+        spark.conf.set(key, val)
+    try:
+        yield
+    finally:
+        for key, val in prior.items():
+            if val is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, val)
+
+
 def test_rocksdb_state_store_watermarked_agg(spark, tmp_path):
     """The deployment state-store posture (session.ROCKSDB_CONF) must
     produce the same windowed results as the default heap provider.
-    providerClass is a runtime SQL conf read at QUERY start (a fresh
-    checkpoint pins it), so the suite session can flip it per-test.
     Skips if the bundled RocksDB JNI cannot initialize on this host."""
-    from eventbridge_etl_spark.session import ROCKSDB_CONF
-
     land = str(tmp_path / "land")
     os.makedirs(land)
     with open(os.path.join(land, "a.jsonl"), "w") as fh:
@@ -986,12 +1006,7 @@ def test_rocksdb_state_store_watermarked_agg(spark, tmp_path):
             '{"ts": "2024-01-01T00:00:15", "k": "a", "v": 2}\n'
             '{"ts": "2024-01-01T00:00:07", "k": "b", "v": 5}\n'
         )
-    prior = {
-        key: spark.conf.get(key, None) for key in ROCKSDB_CONF
-    }
-    for key, val in ROCKSDB_CONF.items():
-        spark.conf.set(key, val)
-    try:
+    with state_store(spark, "rocksdb"):
         stream = (
             spark.readStream.schema("ts timestamp, k string, v long")
             .json(land)
@@ -1033,9 +1048,79 @@ def test_rocksdb_state_store_watermarked_agg(spark, tmp_path):
         assert any(
             f.endswith((".changelog", ".zip")) for f in state_files
         ), state_files[:10]
-    finally:
-        for key, val in prior.items():
-            if val is None:
-                spark.conf.unset(key)
-            else:
-                spark.conf.set(key, val)
+
+
+def _state_rows(query) -> list[int]:
+    """``numRowsTotal`` of the first state operator, one per micro-batch."""
+    progress = sorted(query.recentProgress, key=lambda p: p["batchId"])
+    return [int(p["stateOperators"][0]["numRowsTotal"]) for p in progress if p["stateOperators"]]
+
+
+@pytest.mark.parametrize("provider", ["default", "rocksdb"])
+def test_streaming_state_stays_bounded(spark, tmp_path, provider):
+    """State is bounded by keys and the watermark, not by rows ingested.
+
+    Thirty files land 10 s of event time each for K keys, read one file
+    per micro-batch.  A 10 s tumbling-window count under a 30 s
+    watermark must stop growing once eviction starts: its last-third
+    mean of state rows stays within 10% of the middle-third mean (means,
+    not maxes: a new window opens just before the oldest is evicted, so
+    the steady state swings by one window generation).  Without
+    eviction the rows would grow with every batch.  The EWMA operator
+    keeps exactly one state row per key throughout."""
+    from eventbridge_etl_spark.streaming.stateful import ewma_smoothing
+
+    n_files, keys = 30, 20
+    src = tmp_path / "src"
+    src.mkdir()
+    event_id = 0
+    for i in range(n_files):
+        path = src / f"part-{i:03d}.json"
+        with open(path, "w") as fh:
+            for sec in range(0, 10, 2):
+                for k in range(keys):
+                    event_id += 1
+                    # every 50th event lags 15 s: late but inside the watermark
+                    t = i * 10 + sec - (15 if event_id % 50 == 0 else 0)
+                    fh.write(json.dumps({
+                        "ts": f"2024-01-01T00:{t // 60 + 10:02d}:{t % 60:02d}",
+                        "user_id": k, "value": float(event_id % 97), "event_id": event_id,
+                    }) + "\n")
+        # the file source takes files oldest first: distinct mtimes fix
+        # the order, so event time advances one file at a time
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+    events = (
+        spark.readStream.schema("ts timestamp, user_id long, value double, event_id long")
+        .option("maxFilesPerTrigger", "1")
+        .json(str(src))
+    )
+    windowed = (
+        events.withWatermark("ts", "30 seconds")
+        .groupBy(F.window("ts", "10 seconds"), "user_id")
+        .agg(F.count("*").alias("n"))
+    )
+    ewma = ewma_smoothing(events.withColumn("ts_us", F.unix_micros("ts")))
+
+    def run(df, name):
+        q = (
+            df.writeStream.outputMode("update")
+            .format("noop")
+            .option("checkpointLocation", str(tmp_path / name))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(300)
+        return _state_rows(q)
+
+    with state_store(spark, provider):
+        win_rows = run(windowed, "windowed")
+        ewma_rows = run(ewma, "ewma")
+
+    assert len(win_rows) >= n_files, win_rows
+    third = len(win_rows) // 3
+    mid = win_rows[third : 2 * third]
+    last = win_rows[2 * third :]
+    mid_mean, last_mean = sum(mid) / len(mid), sum(last) / len(last)
+    assert abs(last_mean - mid_mean) <= 0.10 * mid_mean, win_rows
+    assert max(win_rows) < n_files * keys / 3, win_rows
+    assert ewma_rows and set(ewma_rows) == {keys}, ewma_rows
