@@ -239,13 +239,10 @@ def get_spark(
     ``state_store``: ``"rocksdb"`` applies :data:`ROCKSDB_CONF` (the
     100 TB streaming deployment posture — disk-backed state, changelog
     checkpoints); ``"hdfs"``/``None`` keeps Spark's default heap-backed
-    provider (fine for tests and small state).  Env override:
-    ``SPARK_GRAFT_STATE_STORE=rocksdb``.  NOTE: like every
+    provider (fine for tests and small state).  NOTE: like every
     ``spark.sql.streaming.stateStore.*`` conf this only takes effect on
     a NEW query checkpoint — an existing checkpoint pins its provider.
     """
-    if state_store is None:
-        state_store = os.environ.get("SPARK_GRAFT_STATE_STORE")
     if state_store not in (None, "", "hdfs", "rocksdb"):
         raise ValueError(
             f"state_store must be None/'hdfs'/'rocksdb', got {state_store!r}"

@@ -57,6 +57,12 @@ def start_csv_upsert_stream(
     Restarting with the same checkpoint never reprocesses a committed
     file, and the store's idempotent bucket rewrite absorbs epoch
     replays after crashes mid-commit.
+
+    Spark's file source commits landed files in modification-time
+    order, so with ``max_files_per_trigger`` the row from the later
+    file wins a key both files update.  Files that share an mtime have
+    no fixed order, so their relative precedence is arbitrary, as in the
+    reference.
     """
     raw = read_csv_stream(
         spark, landing_dir, schema, max_files_per_trigger=max_files_per_trigger

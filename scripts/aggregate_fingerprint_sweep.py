@@ -28,6 +28,11 @@ compensating errors could cancel in a sum) but it is value-level,
 order-free, and runs in O(1) result memory — the right check at a
 scale where the result set itself is the dominant cost.
 
+Each gate prints one ``verify.report`` line (FP-MATCH, MISMATCH followed
+by ``!!`` detail lines, or ERROR) and the run ends with ``verify.DONE``,
+so ``verify.verdict`` judges it like a sweep (``verify.py scale`` runs
+it on the sf0.5 replica).
+
 Usage::
 
     SWEEP_SF=/tmp/sf1 python scripts/aggregate_fingerprint_sweep.py \
@@ -42,7 +47,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from verify import duck, m, session  # noqa: E402
+from verify import DONE, duck, m, report, session  # noqa: E402
 
 INTEGRAL = {"tinyint", "smallint", "int", "bigint", "long"}
 FLOATING = {"float", "double"}
@@ -110,40 +115,42 @@ def main() -> int:
     # the repo when the composed gate's sf0.5 oracle spilled >77 GiB
     con = duck(sf)
 
-    bad = 0
+    bad = checked = 0
     for name in names:
-        df = qs[name](spark, sf)
-        specs = _specs(df.dtypes)
-        t0 = time.time()
-        srow = df.selectExpr(
-            *[f"{expr} AS `{lbl}`" for lbl, expr, _ in specs]
-        ).collect()[0]
-        t_spark = time.time() - t0
-        t0 = time.time()
-        duck_sql = (
-            "SELECT "
-            + ", ".join(f'{dexpr} AS "{lbl}"' for lbl, _, dexpr in specs)
-            + f" FROM ({oracles[name]}) _t"
-        )
-        orow = con.execute(duck_sql).fetchone()
-        t_duck = time.time() - t0
+        try:
+            df = qs[name](spark, sf)
+            specs = _specs(df.dtypes)
+            t0 = time.time()
+            srow = df.selectExpr(
+                *[f"{expr} AS `{lbl}`" for lbl, expr, _ in specs]
+            ).collect()[0]
+            t_spark = time.time() - t0
+            t0 = time.time()
+            duck_sql = (
+                "SELECT "
+                + ", ".join(f'{dexpr} AS "{lbl}"' for lbl, _, dexpr in specs)
+                + f" FROM ({oracles[name]}) _t"
+            )
+            orow = con.execute(duck_sql).fetchone()
+            t_duck = time.time() - t0
+        except Exception as e:  # noqa: BLE001 — report and keep going
+            report(name, "ERROR", repr(e)[:200])
+            bad += 1
+            continue
+        checked += 1
         diffs = []
         for (lbl, _, _), ov in zip(specs, orow):
             sv = _canon(srow[lbl])
             ov = _canon(ov)
             if sv != ov:
                 diffs.append(f"{lbl}: spark={sv} oracle={ov}")
-        status = "FP-MATCH" if not diffs else "FP-MISMATCH"
-        print(
-            f"{name:32s} {status} rows={_canon(srow['n_rows'])} "
-            f"spark={t_spark:.1f}s oracle={t_duck:.1f}s",
-            flush=True,
-        )
+        report(name, "MISMATCH" if diffs else "FP-MATCH",
+               f"rows={_canon(srow['n_rows'])} spark={t_spark:.1f}s oracle={t_duck:.1f}s")
         for dmsg in diffs:
             print(f"    !! {dmsg}", flush=True)
         bad += bool(diffs)
 
-    print(f"FINGERPRINT DONE gates={len(names)} bad={bad}", flush=True)
+    print(DONE.format(checked, bad), flush=True)
     spark.stop()
     return 1 if bad else 0
 

@@ -37,7 +37,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from verify import duck, m, session  # noqa: E402
+from verify import DONE, duck, m, report, session  # noqa: E402
 
 SF = os.environ.get("SWEEP_SF", "/tmp/sf1")
 OUT = os.environ.get("CENSUS_OUT", "/tmp/census_sf1")
@@ -122,9 +122,8 @@ def main() -> int:
     print(f"engine: {got} {time.time() - t0:.1f}s", flush=True)
     spark.stop()
     ok = got == derived
-    print(f"graph_triangle_census {'MATCH' if ok else 'MISMATCH'} "
-          f"(chunked oracle, K={K})", flush=True)
-    print(f"SWEEP DONE checked=1 bad={0 if ok else 1}", flush=True)
+    report("graph_triangle_census", "MATCH" if ok else "MISMATCH", f"(chunked oracle, K={K})")
+    print(DONE.format(1, 0 if ok else 1), flush=True)
     return 0 if ok else 1
 
 

@@ -46,7 +46,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import duckdb  # noqa: E402
 import pandas as pd  # noqa: E402
-from verify import duck, m, session  # noqa: E402
+from verify import DONE, duck, m, report, session  # noqa: E402
 
 from eventbridge_etl_spark.compare import frame_digest, normalize_frame  # noqa: E402
 
@@ -171,10 +171,9 @@ def main() -> int:
         else:
             ok = normalize_frame(got) == normalize_frame(exp)
             how = "canon"
-        print(f"{n} {'MATCH' if ok else 'MISMATCH'} rows={len(got)}|{len(exp)} "
-              f"({how})", flush=True)
+        report(n, "MATCH" if ok else "MISMATCH", f"rows={len(got)}|{len(exp)} ({how})")
         bad += not ok
-    print(f"SWEEP DONE checked={len(oracle)} bad={bad}", flush=True)
+    print(DONE.format(len(oracle), bad), flush=True)
     return 1 if bad else 0
 
 

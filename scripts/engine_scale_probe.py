@@ -22,6 +22,11 @@ intermediate sf0.5 replica (where the quadratic candidate volume still
 fits the oracle).  The probe proves the ENGINE side scales; the ladder
 below it proves the values.
 
+Each gate prints one ``verify.report`` line (ENGINE-OK with its
+fingerprint, or ERROR), a broken invariant a MISMATCH line for the gate
+it names, and the run ends with ``verify.DONE`` whose ``bad`` counts
+both.
+
 Usage::
 
     SWEEP_SF=/tmp/sf1 python scripts/engine_scale_probe.py \
@@ -37,7 +42,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from aggregate_fingerprint_sweep import _canon, _specs  # noqa: E402
-from verify import m, session  # noqa: E402
+from verify import DONE, m, report, session  # noqa: E402
 
 
 def main() -> int:
@@ -54,8 +59,7 @@ def main() -> int:
         sys.exit(f"not registry gates: {unknown}")
 
     results: dict[str, dict] = {}
-    bad = 0
-    errored = 0
+    bad = 0  # gates that raised + invariant failures
     for name in names:
         # the timer wraps gate CONSTRUCTION too: iterative operators
         # (near_dup_clusters' label propagation) run eager actions
@@ -73,13 +77,13 @@ def main() -> int:
                 *[f"{expr} AS `{lbl}`" for lbl, expr, _ in specs]
             ).collect()[0]
         except Exception as e:  # noqa: BLE001 — report and keep probing
-            print(f"{name:32s} ENGINE-ERROR {repr(e)[:200]}", flush=True)
-            errored += 1
+            report(name, "ERROR", repr(e)[:200])
+            bad += 1
             continue
         dt = time.time() - t0
         fp = {lbl: _canon(row[lbl]) for lbl, _, _ in specs}
         results[name] = fp
-        print(f"{name:32s} ENGINE-OK rows={fp['n_rows']} {dt:.1f}s", flush=True)
+        report(name, "ENGINE-OK", f"rows={fp['n_rows']} {dt:.1f}s")
         for lbl, v in fp.items():
             print(f"    {lbl} = {v}", flush=True)
 
@@ -100,14 +104,14 @@ def main() -> int:
                 .collect()[0]["s"]
             )
         except Exception as e:  # noqa: BLE001
-            print(f"!! INVARIANT FAIL: histogram re-run died: {repr(e)[:200]}")
+            report("dedup_cluster_sizes", "ERROR", f"histogram re-run: {repr(e)[:200]}")
             bad += 1
             got = None
         if got is None:
             pass
         elif got != n_docs:
-            print(f"!! INVARIANT FAIL: sum(n_members*n_clusters)={got} "
-                  f"!= docs={n_docs}")
+            report("dedup_cluster_sizes", "MISMATCH",
+                   f"invariant: sum(n_members*n_clusters)={got} != docs={n_docs}")
             bad += 1
         else:
             print(f"invariant ok: cluster-size histogram sums to doc count "
@@ -118,20 +122,20 @@ def main() -> int:
         # every doc appears exactly once with a non-null side
         side_n = fp.get("split.n")
         if side_n is not None and side_n != n:
-            print(f"!! INVARIANT FAIL: {n - side_n} rows with NULL split side")
+            report("sample_leakage_safe_split", "MISMATCH",
+                   f"invariant: {n - side_n} rows with NULL split side")
             bad += 1
         else:
             print(f"invariant ok: every row carries a split side ({n} rows)")
         if has("dedup_clusters", "sample_leakage_safe_split"):
             if fp["n_rows"] != results["dedup_clusters"]["n_rows"]:
-                print("!! INVARIANT FAIL: split row count != clusters row count")
+                report("sample_leakage_safe_split", "MISMATCH",
+                       "invariant: split row count != clusters row count")
                 bad += 1
 
-    print(f"ENGINE PROBE DONE gates={len(names)} errors={errored} "
-          f"invariant_failures={bad}",
-          flush=True)
+    print(DONE.format(len(results), bad), flush=True)
     spark.stop()
-    return 1 if bad or errored else 0
+    return 1 if bad else 0
 
 
 if __name__ == "__main__":

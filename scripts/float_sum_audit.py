@@ -1,9 +1,9 @@
-"""Measured sf1 audit of every remaining double-sum-then-round gate
-(VERDICT r9 #4).
+"""Measured audit of every gate whose oracle still sums doubles and then
+rounds.
 
-The r5 speed trade (double SUM, then ROUND(...,2), instead of exact
-decimal sums) has flipped a cent at sf1 twice — q9 in r7; q1/q5/q11 in
-r9 — because a rounded double is engine-accumulation-order-dependent
+The speed trade (double SUM, then ROUND(...,2), instead of an exact
+decimal sum) has flipped a cent at sf1 before — q9, then q1/q5/q11 —
+because a rounded double depends on the engine's accumulation order
 exactly when the TRUE sum sits near a rounding half edge.  This script
 makes the remaining trades MEASURED rather than assumed: for each gate
 still double-summing, it computes at the target fixture
@@ -17,11 +17,17 @@ still double-summing, it computes at the target fixture
   error is the same class and bounded the same way);
 - verdict: **SAFE** when min_edge > 100 × max_err (the double image
   cannot cross the edge with two orders of magnitude to spare),
-  **CONVERT** otherwise (move the gate to the exact-decimal recipe).
+  **CONVERT** otherwise (move the gate to the exact-decimal recipe),
+  **EMPTY** when the fixture has no qualifying group.
 
 Quotient gates (ROUND(a/b, 4), and threshold predicates comparing a
 column against 0.2·AVG / AVG subqueries) are audited with exact
 rational arithmetic in Python over decimal-sum numerators/denominators.
+
+A gate whose oracle moves to an exact decimal sum leaves the list; a new
+gate that double-sums money joins it.  The table ends with
+``verify.DONE``, ``bad`` counting CONVERT rows, so ``verify.verdict``
+judges it like a sweep (``verify.py scale`` runs it on the sf1 replica).
 
 Usage::
 
@@ -36,31 +42,20 @@ from decimal import Decimal
 from fractions import Fraction
 from math import floor
 
-import duckdb
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF = os.environ.get("SWEEP_SF", "/tmp/sf1")
+from verify import DONE, duck  # noqa: E402
 
 #: exact decimal forms of the fact columns (2dp money, 2dp discount,
 #: integer-valued quantity — the generator's fixed-decimal domains)
 EP = "CAST(l_extendedprice AS DECIMAL(18,2))"
 DISC = "CAST(l_discount AS DECIMAL(8,6))"
-REV_EXACT = f"SUM({EP} * (1 - {DISC}))"
-REV_DBL = "SUM(l_extendedprice * (1 - l_discount))"
 
-#: (gate, k, per-group SQL producing ex DECIMAL / db DOUBLE / n BIGINT)
+#: (gate, summed column, k, per-group SQL producing ex DECIMAL / db
+#: DOUBLE / n BIGINT)
 SUM_GATES = [
     (
-        "q3_shipping_priority", 2,
-        f"""SELECT {REV_EXACT} AS ex, {REV_DBL} AS db, COUNT(*) AS n
-        FROM customer JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE c_mktsegment = 'BUILDING'
-          AND o_orderdate < TIMESTAMP '1996-01-01'
-          AND l_shipdate > TIMESTAMP '1996-01-01'
-        GROUP BY l_orderkey, o_orderdate, o_orderpriority""",
-    ),
-    (
-        "q6_forecast_revenue", 2,
+        "q6_forecast_revenue", "revenue", 2,
         f"""SELECT SUM({EP} * {DISC}) AS ex,
                SUM(l_extendedprice * l_discount) AS db, COUNT(*) AS n
         FROM lineitem
@@ -69,8 +64,9 @@ SUM_GATES = [
           AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24""",
     ),
     (
-        "q7_volume_shipping", 2,
-        f"""SELECT {REV_EXACT} AS ex, {REV_DBL} AS db, COUNT(*) AS n
+        "q7_volume_shipping", "revenue", 2,
+        f"""SELECT SUM({EP} * (1 - {DISC})) AS ex,
+               SUM(l_extendedprice * (1 - l_discount)) AS db, COUNT(*) AS n
         FROM supplier JOIN lineitem ON s_suppkey = l_suppkey
         JOIN orders ON o_orderkey = l_orderkey
         JOIN customer ON c_custkey = o_custkey
@@ -82,112 +78,55 @@ SUM_GATES = [
                              AND TIMESTAMP '1997-12-31'
         GROUP BY n1.n_name, n2.n_name, EXTRACT(year FROM l_shipdate)""",
     ),
-    (
-        "q10_returned_items", 2,
-        f"""SELECT {REV_EXACT} AS ex, {REV_DBL} AS db, COUNT(*) AS n
-        FROM customer JOIN orders ON c_custkey = o_custkey
-        JOIN lineitem ON l_orderkey = o_orderkey
-        WHERE o_orderdate >= TIMESTAMP '1996-10-01'
-          AND o_orderdate < TIMESTAMP '1997-01-01'
-          AND l_returnflag = 'R'
-        GROUP BY c_custkey""",
-    ),
-    (
-        "q19_disjunctive_predicates", 2,
-        f"""SELECT {REV_EXACT} AS ex, {REV_DBL} AS db, COUNT(*) AS n
-        FROM lineitem JOIN part ON p_partkey = l_partkey
-        WHERE (p_brand = 'Brand#12' AND p_size BETWEEN 1 AND 15
-               AND l_quantity >= 1 AND l_quantity <= 11)
-           OR (p_brand = 'Brand#23' AND p_size BETWEEN 1 AND 25
-               AND l_quantity >= 10 AND l_quantity <= 20)
-           OR (p_brand = 'Brand#34' AND p_size BETWEEN 1 AND 35
-               AND l_quantity >= 20 AND l_quantity <= 30)""",
-    ),
     # ---- pure 2dp / integer operand sums (exact sum IS a 2dp value;
     # ---- the only flip risk is image error >= 0.005 absolute) ----
     (
-        "agg_rollup", 2,
-        """SELECT SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS ex,
-               SUM(c_acctbal) AS db, COUNT(*) AS n
-        FROM customer JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        GROUP BY ROLLUP (r_name, n_name)""",
-    ),
-    (
-        "agg_cube", 2,
+        "agg_cube", "sum_qty", 2,
         """SELECT SUM(CAST(l_quantity AS DECIMAL(18,2))) AS ex,
                SUM(l_quantity) AS db, COUNT(*) AS n
         FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
     ),
     (
-        "agg_grouping_sets", 2,
-        """SELECT SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS ex,
-               SUM(o_totalprice) AS db, COUNT(*) AS n
-        FROM orders
-        GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))""",
-    ),
-    (
-        "join_broadcast_chain", 2,
-        """SELECT SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS ex,
-               SUM(o_totalprice) AS db, COUNT(*) AS n
-        FROM orders JOIN customer ON o_custkey = c_custkey
-        JOIN nation ON c_nationkey = n_nationkey
-        JOIN region ON n_regionkey = r_regionkey
-        GROUP BY r_name, c_mktsegment""",
-    ),
-    (
-        "join_range_nonequi", 2,
+        "join_range_nonequi", "sum_price", 2,
         """SELECT SUM(CAST(p_retailprice AS DECIMAL(18,2))) AS ex,
                SUM(p_retailprice) AS db, COUNT(*) AS n
         FROM part GROUP BY p_size""",
     ),
     (
-        "conditional_pivot", 2,
-        """SELECT SUM(CASE WHEN o_orderstatus = 'F'
-                      THEN CAST(o_totalprice AS DECIMAL(18,2))
-                      ELSE 0 END) AS ex,
-               SUM(CASE WHEN o_orderstatus = 'F' THEN o_totalprice
-                        ELSE 0 END) AS db, COUNT(*) AS n
-        FROM orders GROUP BY o_orderpriority""",
-    ),
-    (
-        "join_full_outer_coalesce.order_total", 2,
+        "join_full_outer_coalesce", "order_total", 2,
         """SELECT SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS ex,
                SUM(o_totalprice) AS db, COUNT(*) AS n
         FROM orders GROUP BY date_trunc('day', o_orderdate)""",
     ),
     (
-        "join_full_outer_coalesce.ship_total", 2,
+        "join_full_outer_coalesce", "ship_total", 2,
         """SELECT SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS ex,
                SUM(l_extendedprice) AS db, COUNT(*) AS n
         FROM lineitem GROUP BY date_trunc('day', l_shipdate)""",
     ),
     (
-        "join_salted_skew", 2,
+        "join_salted_skew", "total_qty", 2,
         """SELECT SUM(CAST(l_quantity AS DECIMAL(18,2))) AS ex,
                SUM(l_quantity) AS db, COUNT(*) AS n
         FROM lineitem JOIN part ON l_partkey = p_partkey
         GROUP BY p_name""",
     ),
     (
-        "q18_large_volume_customer", 2,
+        "q18_large_volume_customer", "total_qty", 2,
         """SELECT SUM(CAST(l_quantity AS DECIMAL(18,2))) AS ex,
                SUM(l_quantity) AS db, COUNT(*) AS n
         FROM lineitem GROUP BY l_orderkey""",
     ),
-    (
-        "q22_dormant_customers", 2,
-        """SELECT SUM(CAST(c_acctbal AS DECIMAL(18,2))) AS ex,
-               SUM(c_acctbal) AS db, COUNT(*) AS n
-        FROM customer WHERE c_acctbal > 0.0
-        GROUP BY substr(c_name, 1, 12)""",
-    ),
 ]
+
+
+def _dec(x) -> Decimal | None:
+    return None if x is None else Decimal(float(x))
 
 
 def audit_sums(con) -> list[tuple]:
     rows = []
-    for name, k, body in SUM_GATES:
+    for name, what, k, body in SUM_GATES:
         q = f"""
         WITH g AS ({body})
         SELECT COUNT(*) AS groups, MAX(n) AS max_n,
@@ -198,7 +137,8 @@ def audit_sums(con) -> list[tuple]:
         """
         groups, max_n, min_edge_frac, max_err = con.execute(q).fetchone()
         min_edge = (Decimal(min_edge_frac) / (10 ** k)) if min_edge_frac is not None else None
-        rows.append((name, k, groups, max_n, min_edge, Decimal(max_err)))
+        rows.append((name, what, k, groups, max_n, min_edge,
+                     None if max_err is None else Decimal(max_err)))
     return rows
 
 
@@ -243,25 +183,8 @@ def audit_quotients(con) -> list[tuple]:
         e = abs(img - exq)
         min_edge = d if min_edge is None or d < min_edge else min_edge
         max_err = max(max_err, e)
-    out.append(("q8_market_share (quotient)", 4, len(rows), None,
-                Decimal(float(min_edge)), Decimal(float(max_err))))
-
-    # q17: ROUND(SUM(l_extendedprice)/7.0, 4) — single group, but the
-    # qualifying set itself depends on the 0.2*AVG threshold, audited
-    # separately below
-    num, dnum, n = con.execute("""
-        SELECT SUM(CAST(l_extendedprice AS DECIMAL(18,2))),
-               SUM(l_extendedprice), COUNT(*)
-        FROM lineitem JOIN part ON p_partkey = l_partkey
-        WHERE p_brand = 'Brand#3'
-          AND l_quantity < (SELECT 0.2 * AVG(l_quantity) FROM lineitem l2
-                            WHERE l2.l_partkey = lineitem.l_partkey)
-    """).fetchone()
-    exq = Fraction(num) / 7
-    img = Fraction(dnum / 7.0)
-    out.append(("q17_small_quantity_revenue (sum/7)", 4, 1, n,
-                Decimal(float(_frac_edge_dist(exq, 4))),
-                Decimal(float(abs(img - exq)))))
+    out.append(("q8_market_share", "quotient", 4, len(rows), None,
+                _dec(min_edge), _dec(max_err)))
 
     # q17 threshold: 0.2*AVG(l_quantity) vs integer quantities — flip
     # iff the double image of sum/(5*cnt) crosses an integer the exact
@@ -281,8 +204,8 @@ def audit_quotients(con) -> list[tuple]:
         if d > 0:  # exact-integer thresholds: < is unambiguous either way
             min_d = d if min_d is None or d < min_d else min_d
         max_e = max(max_e, e)
-    out.append(("q17 threshold 0.2*avg(qty)", None, len(rows), None,
-                Decimal(float(min_d)), Decimal(float(max_e))))
+    out.append(("q17_small_quantity_revenue", "threshold 0.2*avg(qty)", None,
+                len(rows), None, _dec(min_d), _dec(max_e)))
 
     # q22 threshold: c_acctbal > (SELECT AVG(c_acctbal) WHERE > 0) —
     # acctbals are 2dp multiples; distance = min |acctbal - exact avg|
@@ -290,52 +213,50 @@ def audit_quotients(con) -> list[tuple]:
         "SELECT SUM(CAST(c_acctbal AS DECIMAL(18,2))), SUM(c_acctbal), "
         "COUNT(*) FROM customer WHERE c_acctbal > 0.0"
     ).fetchone()
-    avg_exact = Fraction(s) / c
-    avg_img = Fraction(ds / c)
-    d = con.execute(
-        f"SELECT MIN(ABS(CAST(c_acctbal AS DECIMAL(18,2)) - "
-        f"CAST({float(avg_exact)} AS DECIMAL(28,12)))) FROM customer"
-    ).fetchone()[0]
-    out.append(("q22 threshold avg(acctbal)", None, 1, c,
-                Decimal(d), Decimal(float(abs(avg_img - avg_exact)))))
+    d = err = None
+    if c:
+        avg_exact = Fraction(s) / c
+        err = abs(Fraction(ds / c) - avg_exact)
+        d = con.execute(
+            f"SELECT MIN(ABS(CAST(c_acctbal AS DECIMAL(18,2)) - "
+            f"CAST({float(avg_exact)} AS DECIMAL(28,12)))) FROM customer"
+        ).fetchone()[0]
+    out.append(("q22_dormant_customers", "threshold avg(acctbal)", None, 1, c,
+                None if d is None else Decimal(d), _dec(err)))
     return out
 
 
+def disposition(min_edge, max_err) -> tuple[str, str]:
+    """``(verdict, margin)`` of one audited row."""
+    if min_edge is None:
+        return "EMPTY", ""
+    if min_edge == 0:
+        # a TRUE half edge: the image's rounding there is
+        # implementation-defined (Spark BigDecimal HALF_UP on the binary
+        # expansion vs DuckDB scaled nearbyint), so no error margin
+        # makes it safe
+        return "CONVERT", "on-edge"
+    if not max_err:
+        return "SAFE", "exact"
+    ratio = min_edge / max_err
+    return ("SAFE" if ratio > 100 else "CONVERT"), f"{float(ratio):.1e}"
+
+
 def main() -> int:
-    con = duckdb.connect()
-    for t in ("region nation customer supplier part orders lineitem "
-              "events documents embeddings").split():
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
+    sf = os.environ.get("SWEEP_SF", "/tmp/sf1")
+    con = duck(sf)
+    rows = audit_sums(con) + audit_quotients(con)
     bad = 0
-    print(f"fixture: {SF}")
-    print("| gate | k | groups | max n | min edge dist | max img err | margin | verdict |")
-    print("|---|---|---|---|---|---|---|---|")
-    for name, k, groups, max_n, min_edge, max_err in (
-        audit_sums(con) + audit_quotients(con)
-    ):
-        if min_edge is None:
-            verdict, margin = "EMPTY", ""
-        elif min_edge == 0:
-            # a TRUE half edge: the image's rounding there is
-            # implementation-defined (Spark BigDecimal HALF_UP on the
-            # binary expansion vs DuckDB scaled nearbyint — the r5s3
-            # probe), so no error margin makes it safe
-            verdict, margin = "CONVERT", "on-edge"
-        elif max_err == 0:
-            verdict, margin = "SAFE", "exact"
-        else:
-            ratio = min_edge / max_err
-            margin = f"{float(ratio):.1e}"
-            verdict = "SAFE" if ratio > 100 else "CONVERT"
-        if verdict == "CONVERT":
-            bad += 1
-        print(
-            f"| {name} | {k} | {groups} | {max_n} | {min_edge} "
-            f"| {max_err} | {margin} | {verdict} |"
-        )
-    print(f"AUDIT DONE gates={len(SUM_GATES) + 4} convert_needed={bad}")
+    print(f"fixture: {sf}")
+    print("| gate | audited | k | groups | max n | min edge dist | max img err "
+          "| margin | verdict |")
+    print("|---|---|---|---|---|---|---|---|---|")
+    for name, what, k, groups, max_n, min_edge, max_err in rows:
+        v, margin = disposition(min_edge, max_err)
+        bad += v == "CONVERT"
+        print(f"| {name} | {what} | {k} | {groups} | {max_n} | {min_edge} "
+              f"| {max_err} | {margin} | {v} |")
+    print(DONE.format(len(rows), bad), flush=True)
     return 1 if bad else 0
 
 

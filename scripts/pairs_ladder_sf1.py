@@ -29,7 +29,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from verify import duck, m, session  # noqa: E402
+from verify import DONE, duck, m, report, session  # noqa: E402
 
 from eventbridge_etl_spark.compare import digest_expr, frame_digest  # noqa: E402
 
@@ -100,9 +100,8 @@ def main() -> int:
     d_engine = engine_digest()
     print("engine digest:", d_engine, flush=True)
     ok = d_engine == d_oracle
-    print(f"dedup_minhash_lsh {'MATCH' if ok else 'MISMATCH'} "
-          f"(chunked-oracle digest, K={K})", flush=True)
-    print(f"SWEEP DONE checked=1 bad={0 if ok else 1}", flush=True)
+    report("dedup_minhash_lsh", "MATCH" if ok else "MISMATCH", f"(chunked-oracle digest, K={K})")
+    print(DONE.format(1, 0 if ok else 1), flush=True)
     return 0 if ok else 1
 
 

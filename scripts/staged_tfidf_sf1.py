@@ -24,9 +24,14 @@ over candidate shards):
 3. ``fingerprint`` — compute the order-insensitive exact aggregates
    (``aggregate_fingerprint_sweep._specs``, the same comparator the
    sf1 pair family uses) over the unioned results and print them in
-   the ENGINE-OK format ``sweep_log_table.py`` parses.
+   the engine probe's ENGINE-OK format.
 
-Usage (driver loop)::
+Every mode ends with ``verify.DONE`` (``checked=0`` for the two staging
+modes), so ``verify.verdict`` judges each like a sweep.  ``candidates``
+first clears ``STAGE_OUT``, so ``fingerprint`` never reads a shard left
+by an earlier run; every mode removes its ``STAGE_SCRATCH`` on exit.
+
+Usage (``verify.py scale`` runs these steps)::
 
     export SWEEP_SF=/tmp/sf1 STAGE_OUT=/tmp/sf1_stage NCHUNKS=8
     python scripts/staged_tfidf_sf1.py candidates
@@ -37,12 +42,13 @@ Usage (driver loop)::
 from __future__ import annotations
 
 import os
+import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from verify import session  # noqa: E402
+from verify import DONE, report, session  # noqa: E402
 
 TAU = 0.8
 NUM_HASHES = 16
@@ -53,21 +59,23 @@ def main() -> int:
     sf = os.environ.get("SWEEP_SF", "/tmp/sf1")
     out = os.environ.get("STAGE_OUT", "/tmp/sf1_stage")
     nchunks = int(os.environ.get("NCHUNKS", "8"))
+    scratch = os.environ.get("STAGE_SCRATCH", "/tmp/stage_scratch")
     mode = sys.argv[1] if len(sys.argv) > 1 else "?"
+    if mode not in ("candidates", "verify", "fingerprint"):
+        sys.exit("usage: staged_tfidf_sf1.py candidates|verify <k>|fingerprint")
 
     from pyspark.sql import functions as F
 
     from eventbridge_etl_spark.operators import dedup as D
     from eventbridge_etl_spark.sources.tables import load_tables
 
-    spark = session("local[16]", "64", "48g", conf={
-        "spark.local.dir": os.environ.get("STAGE_SCRATCH", "/tmp/stage_scratch"),
-    })
+    spark = session("local[16]", "64", "48g", conf={"spark.local.dir": scratch})
     spark.sparkContext.setLogLevel("ERROR")
     doc = load_tables(spark, sf, ("documents",))["documents"]
     t0 = time.time()
 
     if mode == "candidates":
+        shutil.rmtree(out, ignore_errors=True)
         cand = D.lsh_candidate_pairs(doc, "doc_id", "text", NUM_HASHES, BANDS)
         (
             cand.withColumn(
@@ -79,7 +87,8 @@ def main() -> int:
             .parquet(f"{out}/candidates")
         )
         n = spark.read.parquet(f"{out}/candidates").count()
-        print(f"candidates DONE rows={n} {time.time() - t0:.1f}s", flush=True)
+        print(f"candidates rows={n} {time.time() - t0:.1f}s", flush=True)
+        print(DONE.format(0, 0), flush=True)
 
     elif mode == "verify":
         k = int(sys.argv[2])
@@ -91,9 +100,10 @@ def main() -> int:
         res = D.tfidf_cosine_verify_candidates(doc, cand, "doc_id", "text", TAU)
         res.write.mode("overwrite").parquet(f"{out}/verified/chunk={k}")
         n = spark.read.parquet(f"{out}/verified/chunk={k}").count()
-        print(f"verify chunk={k} DONE rows={n} {time.time() - t0:.1f}s", flush=True)
+        print(f"verify chunk={k} rows={n} {time.time() - t0:.1f}s", flush=True)
+        print(DONE.format(0, 0), flush=True)
 
-    elif mode == "fingerprint":
+    else:
         from aggregate_fingerprint_sweep import _canon, _specs
 
         missing = [
@@ -110,23 +120,14 @@ def main() -> int:
             *[f"{expr} AS `{lbl}`" for lbl, expr, _ in specs]
         ).collect()[0]
         fp = {lbl: _canon(row[lbl]) for lbl, _, _ in specs}
-        dt = time.time() - t0
-        print(
-            f"{'dedup_tfidf_on_candidates':32s} ENGINE-OK rows={fp['n_rows']} "
-            f"{dt:.1f}s (staged, {nchunks} chunks)",
-            flush=True,
-        )
+        report("dedup_tfidf_on_candidates", "ENGINE-OK",
+               f"rows={fp['n_rows']} {time.time() - t0:.1f}s (staged, {nchunks} chunks)")
         for lbl, v in fp.items():
             print(f"    {lbl} = {v}", flush=True)
-        # sentinel in the engine-probe grammar so sweep_log_table.py
-        # treats this log as a completed chunk, not a crashed one
-        print("ENGINE PROBE DONE gates=1 errors=0 invariant_failures=0",
-              flush=True)
-
-    else:
-        sys.exit("usage: staged_tfidf_sf1.py candidates|verify <k>|fingerprint")
+        print(DONE.format(1, 0), flush=True)
 
     spark.stop()
+    shutil.rmtree(scratch, ignore_errors=True)
     return 0
 
 

@@ -8,6 +8,7 @@ Usage::
     python scripts/verify.py sweep       # every gate vs its DuckDB oracle
     python scripts/verify.py hash        # "<gate> <md5>" per gate, engine only
     python scripts/verify.py battery     # fixtures + 7 sweeps + waivers + suite
+    python scripts/verify.py scale [<log dir>]   # sf1 evidence plan
     python scripts/verify.py close <hash file> [--stamp]   # round close
     python scripts/verify.py waivers [<timeshift fixture dir>]
     python scripts/verify.py jar [--check]
@@ -16,8 +17,8 @@ Usage::
 process, ``entry()`` first, then each oracle-paired gate compared
 type-tagged and order-insensitively.
 It prints one ``<gate> <verdict> ...`` line per gate and ends with
-``SWEEP DONE checked=N bad=N`` (``scripts/sweep_log_table.py`` parses
-both shapes).  Examples::
+``SWEEP DONE checked=N bad=N``; ``verdict()`` is the one reader of both
+shapes.  Examples::
 
     SWEEP_SF=/tmp/advfix/adv SWEEP_PINNED_SKIP=1 python scripts/verify.py sweep
     SWEEP_SF=/root/testdata/sf0.1 SWEEP_DRIVER_MEM=24g python scripts/verify.py sweep
@@ -38,6 +39,16 @@ adv / empty / signmag / timeshift / longtext / unicode) each in a FRESH
 subprocess from ``/tmp``, runs ``waivers`` after timeshift and the
 pytest suite last, and prints BATTERY PASS or FAIL (``--src``,
 ``--out``, ``--surfaces``, ``--no-suite``, ``--no-gen``).
+
+``scale`` runs the sf1 evidence plan: one digest sweep per query
+module at ``SWEEP_SF`` (default ``/tmp/sf1``) with the ``ROUTED`` gates
+left out, then the ladders that carry those gates (chunked oracles,
+fingerprints at ``SWEEP_SF05``, engine probes at ``SWEEP_SF02`` and
+sf1, the staged composed dedup, the float-sum audit).  A missing
+replica is generated first (``gen_scale_replica.py``).  Every step is
+a fresh child judged by ``verdict()``; its output goes to
+``<log dir>/<step>.log`` (default ``/tmp/sf1_sweep``, which also holds
+the ladders' work dirs), and the command exits 1 if any step fails.
 
 ``close`` checks the full-registry ``hash`` output against the gate
 ledger ``data/gate_digests.json`` at round close; ``--stamp`` rewrites
@@ -467,14 +478,21 @@ def verdict(surface, out, returncode) -> dict:
     }
 
 
-def _child(args, env=None):
-    """Run ``verify.py <args>`` fresh from /tmp (surfaces any repo-relative
-    cwd assumption); returns the completed process and its wall time."""
+def _child(argv, env=None, timeout=None):
+    """Run ``scripts/<argv[0]> <argv[1:]>`` fresh from /tmp (surfaces any
+    repo-relative cwd assumption); returns the completed process and its
+    wall time.  A child past ``timeout`` seconds is killed and returns
+    what it printed so far, so it fails ``verdict()`` for want of a DONE
+    line."""
+    cmd = [sys.executable, os.path.join(os.path.dirname(os.path.abspath(__file__)), argv[0]),
+           *argv[1:]]
     t0 = time.time()
-    proc = subprocess.run(
-        [sys.executable, os.path.abspath(__file__), *args],
-        env=env, cwd="/tmp", capture_output=True, text=True,
-    )
+    try:
+        proc = subprocess.run(cmd, env=env, cwd="/tmp", capture_output=True, text=True,
+                              timeout=timeout)
+    except subprocess.TimeoutExpired as e:
+        out, err = (x.decode() if isinstance(x, bytes) else x or "" for x in (e.stdout, e.stderr))
+        proc = subprocess.CompletedProcess(cmd, -9, out, err + f"\nkilled after {timeout} s\n")
     return proc, round(time.time() - t0, 1)
 
 
@@ -486,7 +504,7 @@ def run_sweep(surface, sf_dir, pinned_skip) -> dict:
     env["SWEEP_SF"] = sf_dir
     if pinned_skip:
         env["SWEEP_PINNED_SKIP"] = "1"
-    proc, wall = _child(["sweep"], env)
+    proc, wall = _child(["verify.py", "sweep"], env)
     out = proc.stdout + proc.stderr
     r = verdict(surface, out, proc.returncode)
     r.update(surface=surface, wall_s=wall,
@@ -516,25 +534,16 @@ def battery(args) -> int:
         r = run_sweep(name, sf_dir, pinned_skip)
         if name == "timeshift":
             print(f"[battery] timeshift waiver derivation @ {sf_dir} ...", flush=True)
-            wproc, wall = _child(["waivers", sf_dir])
+            wproc, wall = _child(["verify.py", "waivers", sf_dir])
             r["ok"] = r["ok"] and wproc.returncode == 0
-            tail = [ln for ln in wproc.stdout.splitlines()
-                    if "DERIVED-MATCH" in ln or "FAIL" in ln or "!!" in ln
-                    or ln.startswith("WAIVER CHECK")]
-            for ln in tail[-10:]:
+            for ln in wproc.stdout.splitlines()[-10:]:
                 print("   ", ln, flush=True)
-            if wproc.returncode != 0 and not tail:
-                print((wproc.stdout + wproc.stderr)[-1500:], flush=True)
+            if wproc.returncode != 0 and not wproc.stdout.strip():
+                print(wproc.stderr[-1500:], flush=True)
             print(f"[battery] waiver derivation: "
                   f"{'FAIL' if wproc.returncode else 'OK'} {wall}s", flush=True)
         results.append(r)
-        waived = f" waived={len(r['waived'])}" if r["waived"] else ""
-        print(f"[battery] {name}: {'OK' if r['ok'] else 'FAIL'} checked={r['checked']} "
-              f"bad={r['bad']}{waived} {r['wall_s']}s", flush=True)
-        for line in r["mismatches"][:20]:
-            print("   ", line, flush=True)
-        if r["tail"]:
-            print(r["tail"], flush=True)
+        _print_result("battery", r)
 
     suite_ok = True
     if not args.no_suite:
@@ -544,17 +553,155 @@ def battery(args) -> int:
         ).returncode == 0
 
     print("\n=== BATTERY SUMMARY ===")
-    print(f"{'surface':<10} {'status':<6} {'checked':>7} {'bad':>4} "
-          f"{'waived':>6} {'wall':>8}")
-    for r in results:
-        print(f"{r['surface']:<10} {'OK' if r['ok'] else 'FAIL':<6} "
-              f"{r['checked']:>7} {r['bad']:>4} {len(r['waived']):>6} "
-              f"{r['wall_s']:>7}s")
+    width = _table("surface", results)
     if not args.no_suite:
-        print(f"{'suite':<10} {'OK' if suite_ok else 'FAIL':<6}")
+        print(f"{'suite':<{width}} {'OK' if suite_ok else 'FAIL':<6}")
     all_ok = suite_ok and all(r["ok"] for r in results)
     print("BATTERY", "PASS" if all_ok else "FAIL")
     return 0 if all_ok else 1
+
+
+def _print_result(tag, r):
+    """One finished step: its verdict, failing gate lines and tail."""
+    waived = f" waived={len(r['waived'])}" if r["waived"] else ""
+    print(f"[{tag}] {r['surface']}: {'OK' if r['ok'] else 'FAIL'} checked={r['checked']} "
+          f"bad={r['bad']}{waived} {r['wall_s']}s", flush=True)
+    for line in r["mismatches"][:20]:
+        print("   ", line, flush=True)
+    if r["tail"]:
+        print(r["tail"], flush=True)
+
+
+def _table(head, results) -> int:
+    """Print one summary row per step; returns the name column's width."""
+    width = max([10] + [len(r["surface"]) + 1 for r in results])
+    print(f"{head:<{width}} {'status':<6} {'checked':>7} {'bad':>4} {'waived':>6} {'wall':>8}")
+    for r in results:
+        print(f"{r['surface']:<{width}} {'OK' if r['ok'] else 'FAIL':<6} "
+              f"{r['checked']:>7} {r['bad']:>4} {len(r['waived']):>6} {r['wall_s']:>7}s")
+    return width
+
+
+# --- scale evidence -----------------------------------------------------
+#
+# The sf1 replica (gen_scale_replica.py: 10 key-offset copies of sf0.1)
+# is swept in one chunk per query module, each a fresh digest sweep, so
+# a gate gets sf1 evidence by being registered.  For the ROUTED gates the
+# one-pass oracle, or by design the gate itself, exceeds one box at sf1;
+# the ladder steps named beside each carry its evidence instead, each
+# validated value-level at a smaller scale first (SCALE.md).
+
+#: Gates left out of the module chunks -> the ``scale`` steps that carry
+#: their evidence.  ``()`` excludes by design: an all-pairs verifier
+#: (``operators/dedup.py::_quadratic_guard``) whose scale path is the
+#: LSH-composed gates.
+ROUTED: dict[str, tuple[str, ...]] = {
+    "dedup_tfidf_cosine": (),  # Σdf² = 45.1B candidate pairs at sf1
+    "dedup_tfidf_cosine_capped": (),  # the df cap empties this corpus at sf1
+    "dedup_embedding_cosine": (),  # 2e10 vector pairs at sf1
+    # the fused wedge join spills past the disk; its oracle runs per node chunk
+    "graph_triangle_census": ("census_sf1",),
+    # the pair oracle needs >100 GiB at sf1: fingerprints at sf0.5, the
+    # engine side at sf1, and minhash's oracle digested per id chunk
+    "dedup_jaccard_prefix": ("fingerprint_sf05", "probe_sf1"),
+    "dedup_minhash_lsh": ("fingerprint_sf05", "probe_sf1", "pairs_sf1"),
+    "dedup_simhash": ("fingerprint_sf05", "probe_sf1"),
+    "dedup_containment_pairs": ("fingerprint_sf05", "probe_sf1"),
+    # the recursive closure oracle stalls above sf0.1
+    "dedup_clusters": ("closure_sf05", "probe_sf1"),
+    "dedup_cluster_sizes": ("closure_sf05", "probe_sf1"),
+    "sample_leakage_safe_split": ("closure_sf05", "probe_sf1"),
+    # composed dedup: the sf0.5 oracle spills >77 GiB and the fused sf1
+    # run needs ~90 GiB of shuffle scratch, so staged == fused at sf0.2
+    # and the staged form at sf1
+    "dedup_tfidf_on_candidates": ("probe_sf02", "staged_sf1"),
+    "dedup_tfidf_staged": ("probe_sf02",),
+}
+
+#: Spark settings of the sf1-sized children.
+SF1_SPARK = {"SWEEP_MASTER": "local[16]", "SWEEP_SHUF": "32", "SWEEP_DRIVER_MEM": "24g"}
+
+
+def chunks() -> dict[str, list[str]]:
+    """The sf1 sweep chunks: every gate not ``ROUTED``, grouped by the
+    query module that registers it."""
+    out: dict[str, list[str]] = {}
+    for name, fn in sorted(m.QUERIES.items()):
+        if name not in ROUTED:
+            out.setdefault(fn.__module__.rsplit(".", 1)[-1], []).append(name)
+    return dict(sorted(out.items()))
+
+
+def scale_plan(sf, sf05, sf02, work) -> list[tuple[str, list[str], dict, int]]:
+    """``(step, argv, env, timeout s)`` of every ``scale`` step in run
+    order; a ladder that takes gate names gets the gates routed to it."""
+    def via(step):
+        return [g for g, steps in ROUTED.items() if step in steps]
+
+    sweep = {**SF1_SPARK, "SWEEP_SF": sf, "SWEEP_PINNED_SKIP": "1", "SWEEP_HASH": "1"}
+    shards = 8
+    stage = {"SWEEP_SF": sf, "STAGE_OUT": f"{work}/stage", "NCHUNKS": str(shards),
+             "STAGE_SCRATCH": f"{work}/stage_scratch", "SWEEP_DRIVER_MEM": "48g"}
+    return [
+        *[(mod, ["verify.py", "sweep"], {**sweep, "SWEEP_ONLY": ",".join(gates)}, 3600)
+          for mod, gates in chunks().items()],
+        ("census_sf1", ["census_ladder_sf1.py"],
+         {"SWEEP_SF": sf, "CENSUS_OUT": f"{work}/census", "CENSUS_K": "16",
+          "DUCK_MEM": "32GB"}, 3600),
+        ("closure_sf05", ["closure_ladder_sf05.py"],
+         {**SF1_SPARK, "SWEEP_SF": sf05, "SWEEP_DRIVER_MEM": "16g",
+          "CLOSURE_OUT": f"{work}/closure", "DUCK_MEM": "24GB"}, 7200),
+        ("fingerprint_sf05", ["aggregate_fingerprint_sweep.py", *via("fingerprint_sf05")],
+         {"SWEEP_SF": sf05, "DUCK_MEM": "24GB"}, 7200),
+        ("probe_sf02", ["engine_scale_probe.py", *via("probe_sf02")],
+         {"SWEEP_SF": sf02, "SWEEP_MASTER": "local[8]", "SWEEP_SHUF": "16",
+          "SWEEP_DRIVER_MEM": "12g"}, 3600),
+        ("probe_sf1", ["engine_scale_probe.py", *via("probe_sf1")],
+         {**SF1_SPARK, "SWEEP_SF": sf}, 7200),
+        ("pairs_sf1", ["pairs_ladder_sf1.py"],
+         {"SWEEP_SF": sf, "PAIRS_K": "32", "DUCK_MEM": "32GB"}, 7200),
+        ("staged_sf1_candidates", ["staged_tfidf_sf1.py", "candidates"], stage, 1200),
+        *[(f"staged_sf1_verify{k}", ["staged_tfidf_sf1.py", "verify", str(k)], stage, 1200)
+          for k in range(shards)],
+        ("staged_sf1", ["staged_tfidf_sf1.py", "fingerprint"], stage, 1200),
+        ("float_sum_sf1", ["float_sum_audit.py"], {"SWEEP_SF": sf}, 3600),
+    ]
+
+
+def scale(logdir) -> int:
+    sf = os.environ.get("SWEEP_SF", "/tmp/sf1")
+    sf05 = os.environ.get("SWEEP_SF05", "/tmp/sf05")
+    sf02 = os.environ.get("SWEEP_SF02", "/tmp/sf02")
+    for root, copies in ((sf, 10), (sf05, 5), (sf02, 2)):
+        if not os.path.isdir(root):
+            print(f"[scale] generating the {copies}-copy replica {root}", flush=True)
+            subprocess.run(
+                [sys.executable, os.path.join(REPO, "scripts", "gen_scale_replica.py"),
+                 root, str(copies)],
+                check=True,
+            )
+    os.makedirs(logdir, exist_ok=True)
+    # the plan sets every SWEEP_* a child reads: an exported SWEEP_ONLY
+    # would otherwise shrink every chunk and still print SCALE PASS
+    base = {k: v for k, v in os.environ.items() if not k.startswith("SWEEP_")}
+    results = []
+    for step, argv, env, timeout in scale_plan(sf, sf05, sf02, logdir):
+        print(f"[scale] {step}: {' '.join(argv)} ...", flush=True)
+        proc, wall = _child(argv, {**base, **env}, timeout)
+        out = proc.stdout + proc.stderr
+        log = os.path.join(logdir, f"{step}.log")
+        with open(log, "w") as fh:
+            fh.write(out)
+        r = verdict(step, out, proc.returncode)
+        r.update(surface=step, wall_s=wall, tail="" if r["ok"] else f"    log: {log}")
+        _print_result("scale", r)
+        results.append(r)
+
+    print("\n=== SCALE SUMMARY ===")
+    _table("step", results)
+    ok = all(r["ok"] for r in results)
+    print("SCALE", "PASS" if ok else "FAIL")
+    return 0 if ok else 1
 
 
 # --- round close --------------------------------------------------------
@@ -684,6 +831,9 @@ def main(argv=None) -> int:
     c.add_argument("--stamp", action="store_true", help="rewrite the ledger")
     w = sub.add_parser("waivers", help="derive the timeshift streaming waivers")
     w.add_argument("sf", nargs="?", default="/tmp/advfix/timeshift")
+    sc = sub.add_parser("scale", help="the sf1 evidence plan: module chunks + ladders")
+    sc.add_argument("logdir", nargs="?", default="/tmp/sf1_sweep",
+                    help="per-step logs and the ladders' work dirs")
     j = sub.add_parser("jar", help="rebuild the local FileSystem jar from its source")
     j.add_argument("--check", action="store_true",
                    help="compare with the committed jar instead of writing it")
@@ -694,6 +844,8 @@ def main(argv=None) -> int:
         return hash_()
     if args.cmd == "battery":
         return battery(args)
+    if args.cmd == "scale":
+        return scale(args.logdir)
     if args.cmd == "close":
         return close(args.hash_file, args.stamp)
     if args.cmd == "jar":

@@ -84,6 +84,26 @@ def test_stream_throttle_max_files_per_trigger(spark, tmp_path):
     assert store.read(spark).count() == 3
 
 
+def test_stream_later_mtime_file_wins_a_key(spark, tmp_path):
+    """One file per trigger commits files in modification-time order, not
+    name order: the row of the later-mtime file wins the key."""
+    landing = str(tmp_path / "landing")
+    ckpt = str(tmp_path / "ckpt")
+    store = KeyedParquetStore(str(tmp_path / "store"), keys=["id"], n_buckets=4)
+    write_csv(f"{landing}/a.csv", [["1", "2", "New Rd", "Later", "22222"]])
+    write_csv(f"{landing}/b.csv", [["1", "1", "Old Rd", "Earlier", "11111"]])
+    os.utime(f"{landing}/b.csv", (1_700_000_000, 1_700_000_000))
+    os.utime(f"{landing}/a.csv", (1_700_000_060, 1_700_000_060))
+    q = start_csv_upsert_stream(
+        spark, landing, ckpt, store, ADDRESS_SCHEMA, ADDRESS_RENAMES,
+        max_files_per_trigger=1,
+    )
+    q.awaitTermination(120)
+    assert len([p for p in q.recentProgress if p["numInputRows"] > 0]) == 2
+    got = {r["id"]: r["town"] for r in store.read(spark).collect()}
+    assert got == {"1": "Later"}
+
+
 def test_store_recover_sweeps_crash_leftovers(spark, tmp_path):
     """A crash between the publish renames must be self-healing: recover()
     re-adopts an orphaned _old_ bucket, drops a stale one, and reaps

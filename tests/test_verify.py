@@ -7,6 +7,9 @@
   spill setup; they import ``session``/``duck``.
 - **SWEEP_ONLY** is validated before any JVM starts.
 - **The battery's ok-rule** on synthetic sweep output.
+- **The sf1 plan** is computed from the registry: every gate is in its
+  module's chunk or ``ROUTED``, and every step is judged by ``verdict``.
+- **The float-sum audit** lists registered gates and reaches its DONE line.
 """
 
 from __future__ import annotations
@@ -19,6 +22,8 @@ import sys
 from pathlib import Path
 
 import pytest
+
+from .conftest import SF_DIR
 
 REPO = Path(__file__).resolve().parent.parent
 SCRIPTS = REPO / "scripts"
@@ -217,3 +222,106 @@ def test_battery_runs_isolated_sweeps(monkeypatch, tmp_path, capsys,
     for env in (clean_env, ts_env):
         assert "SWEEP_ONLY" not in env
     assert "SWEEP_PINNED_SKIP" not in clean_env
+
+
+def test_scale_plan_routes_every_gate_once():
+    verify = _verify()
+    chunks = verify.chunks()
+    chunked = [g for gates in chunks.values() for g in gates]
+    assert len(chunked) == len(set(chunked)), "a gate sits in two chunks"
+    assert set(chunked).isdisjoint(verify.ROUTED)
+    assert set(chunked) | set(verify.ROUTED) == set(verify.m.QUERIES)
+    unknown = set(verify.ROUTED) - set(verify.m.QUERIES)
+    assert not unknown, f"ROUTED names unregistered gates: {sorted(unknown)}"
+    for mod, gates in chunks.items():
+        assert {verify.m.QUERIES[g].__module__.rsplit(".", 1)[-1] for g in gates} == {mod}
+    steps = [s for s, *_ in verify.scale_plan("sf1", "sf05", "sf02", "work")]
+    assert len(steps) == len(set(steps))
+    for gate, via in verify.ROUTED.items():
+        assert set(via) <= set(steps), f"{gate} routed to a step the plan lacks"
+
+
+def test_new_gate_lands_in_its_modules_chunk(monkeypatch):
+    verify = _verify()
+
+    def zz_new_gate(spark, sf):
+        raise AssertionError("never run")
+
+    zz_new_gate.__module__ = "eventbridge_etl_spark.queries.graph_q"
+    monkeypatch.setitem(verify.m.QUERIES, "zz_new_gate", zz_new_gate)
+    chunks = verify.chunks()
+    assert "zz_new_gate" in chunks["graph_q"]
+    assert sum("zz_new_gate" in gates for gates in chunks.values()) == 1
+
+
+def _scale(verify, monkeypatch, tmp_path, output):
+    """Run ``scale`` with every child faked by ``output(step argv, env)``;
+    returns the exit code and the ``(argv, env, cwd)`` of each child."""
+    calls = []
+
+    def fake_run(cmd, env=None, cwd=None, **kw):
+        calls.append((cmd[1:], env, cwd))
+        return subprocess.CompletedProcess(cmd, *output(cmd[1:], env))
+
+    monkeypatch.setattr(verify.subprocess, "run", fake_run)
+    for var in ("SWEEP_SF", "SWEEP_SF05", "SWEEP_SF02"):
+        monkeypatch.setenv(var, str(tmp_path))
+    monkeypatch.setenv("SWEEP_ONLY", "join_anti")
+    return verify.main(["scale", str(tmp_path / "logs")]), calls
+
+
+def test_scale_runs_each_chunk_as_a_digest_sweep(monkeypatch, tmp_path, capsys):
+    verify = _verify()
+    rc, calls = _scale(verify, monkeypatch, tmp_path,
+                       lambda argv, env: (0, "SWEEP DONE checked=1 bad=0\n", ""))
+    assert rc == 0
+    assert capsys.readouterr().out.rstrip().endswith("SCALE PASS")
+    chunks = verify.chunks()
+    script = os.path.abspath(verify.__file__)
+    sweeps = [(env, cwd) for argv, env, cwd in calls if argv == [script, "sweep"]]
+    assert [env["SWEEP_ONLY"] for env, _ in sweeps] == [",".join(g) for g in chunks.values()]
+    for env, cwd in sweeps:
+        assert env["SWEEP_HASH"] == "1" and env["SWEEP_PINNED_SKIP"] == "1"
+        assert env["SWEEP_SF"] == str(tmp_path) and cwd == "/tmp"
+    # every step ran once, and the ladders never see the exported SWEEP_ONLY
+    assert len(calls) == len(verify.scale_plan("", "", "", ""))
+    assert all("SWEEP_ONLY" not in env for argv, env, _ in calls if argv != [script, "sweep"])
+    assert len(list((tmp_path / "logs").glob("*.log"))) == len(calls)
+
+
+@pytest.mark.parametrize("out", [
+    "graph_triangle_census MISMATCH (chunked oracle, K=16)\nSWEEP DONE checked=1 bad=1\n",
+    "SWEEP DONE checked=1 bad=1\n",
+    "graph_triangle_census MATCH (chunked oracle, K=16)\n",  # no DONE line
+    None,  # killed at its timeout
+])
+def test_scale_fails_on_one_bad_step(monkeypatch, tmp_path, capsys, out):
+    verify = _verify()
+
+    def output(argv, env):
+        if argv[0].endswith("census_ladder_sf1.py"):
+            if out is None:
+                raise subprocess.TimeoutExpired(argv, 3600, output=b"chunk 0/16 ...\n")
+            return (1 if "bad=1" in out else 0), out, ""
+        return 0, "SWEEP DONE checked=1 bad=0\n", ""
+
+    rc, _ = _scale(verify, monkeypatch, tmp_path, output)
+    assert rc == 1
+    printed = capsys.readouterr().out
+    assert printed.rstrip().endswith("SCALE FAIL")
+    assert "[scale] census_sf1: FAIL" in printed
+
+
+def test_float_sum_audit_lists_registered_gates_and_finishes(monkeypatch, capsys):
+    sys.path.insert(0, str(SCRIPTS))
+    audit = importlib.import_module("float_sum_audit")
+    verify = _verify()
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")  # the clean sweep fixture
+    rows = audit.audit_sums(verify.duck(sf)) + audit.audit_quotients(verify.duck(sf))
+    unknown = {row[0] for row in rows} - set(verify.m.QUERIES)
+    assert not unknown, f"audit lists unregistered gates: {sorted(unknown)}"
+    assert {g for g, *_ in audit.SUM_GATES} <= {row[0] for row in rows}
+    monkeypatch.setenv("SWEEP_SF", sf)
+    rc = audit.main()
+    done = verify.DONE_LINE.search(capsys.readouterr().out.splitlines()[-1])
+    assert done and done.groups() == (str(len(rows)), "0") and rc == 0
