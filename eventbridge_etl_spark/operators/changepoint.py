@@ -25,6 +25,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from eventbridge_etl_spark.operators.timeseries import require_tiebreak
+
 
 def cusum_alarms(
     df: DataFrame,
@@ -44,12 +46,7 @@ def cusum_alarms(
     dwell time above the decision bound).  Null observations are
     skipped without advancing the recursion (they still count in
     ``n_events``)."""
-    if tiebreak_col not in df.columns:
-        raise ValueError(
-            f"tiebreak column {tiebreak_col!r} not in input; pass a unique "
-            "column that breaks timestamp ties (determinism requires a "
-            "total order)"
-        )
+    require_tiebreak(df, tiebreak_col)
     drift = target_scaled + slack_scaled
     h = threshold_scaled
 

@@ -28,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from eventbridge_etl_spark.cache import scoped_persist
+from eventbridge_etl_spark.operators.timeseries import require_tiebreak
 
 
 def pagerank(
@@ -126,12 +127,7 @@ def transition_edges(
     stream.  Ordering uses the explicit tiebreak contract shared with
     the other event-stream operators; one key-partitioned lag window +
     one edge aggregate."""
-    if tiebreak_col not in events.columns:
-        raise ValueError(
-            f"tiebreak column {tiebreak_col!r} not in input; pass a unique "
-            "column that breaks timestamp ties (determinism requires a "
-            "total order)"
-        )
+    require_tiebreak(events, tiebreak_col)
     from pyspark.sql import Window
 
     w = Window.partitionBy(key_col).orderBy(ts_col, tiebreak_col)

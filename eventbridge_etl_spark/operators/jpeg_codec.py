@@ -23,9 +23,11 @@ Coverage:
   + quality -> identical bytes.
 
 The factory shape (`make_jpeg_codec()` returning local functions)
-matches `_make_png_pixels` in multimodal.py: mapInPandas closures
-capture the returned functions as locals, so cloudpickle ships them BY
-VALUE and executors never need this package importable.
+matches `_make_png_pixels` in multimodal.py, whose one shared codec
+factory (`_make_media_codec`) calls it for all three media operators:
+the mapInPandas closures capture the returned functions as locals, so
+cloudpickle ships them BY VALUE and executors never need this package
+importable.
 
 Round-trip accuracy is pinned in tests/test_jpeg_codec.py: flat blocks
 round-trip within +-1, smooth gradients within a small epsilon at

@@ -16,10 +16,19 @@ no codec in this container: ``decode_media`` raises
 ``NotImplementedError`` for those mimes unless ``fake=True``, which
 substitutes a deterministic byte-level "decode" (byte histogram
 features).  Swapping in PIL/librosa/pyav extends the same dispatch
-inside ``_decode_batch`` — the schema contract, Arrow batch shape,
+inside ``_make_media_codec`` — the schema contract, Arrow batch shape,
 partition parallelism, and metadata propagation are identical for real
 and fake paths and tested on committed fixtures
 (tests/data/fixture_*.ppm/pgm/wav + generated PNG/JPEG).
+
+Shared kernel: ``decode_media``, ``resize_media`` and ``perceptual_hash``
+take every payload decision from one codec factory,
+``_make_media_codec`` — the row guard (null id / null payload), the one
+netpbm parser, the ``mime -> (pixels, maxval)`` image dispatch, the WAV
+reader and the nearest-neighbour gather — and narrow their input
+through ``_map_payloads``.  The factory returns local functions, so the
+mapInPandas closures ship them by value and executors need only pandas
+and numpy, not this package.
 
 Scale: mapInPandas streams Arrow batches executor-side; payload bytes
 never hit the driver.  Partition sizing (maxPartitionBytes) bounds
@@ -37,6 +46,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from eventbridge_etl_spark.operators.dedup import band_candidates
+from eventbridge_etl_spark.operators.jpeg_codec import make_jpeg_codec
 
 #: Canonical multimodal column bundle: payload + typed metadata.
 MEDIA_META_SCHEMA = T.StructType(
@@ -72,9 +82,9 @@ def attach_payload(
 
 
 #: Mimes the real (non-fake) paths handle with stdlib parsers.  The
-#: mapInPandas closures capture these by value (they stay
+#: codec factory captures these by value (the closures stay
 #: self-contained for cloudpickle), so this is the single source of
-#: truth for dispatch in decode AND resize.
+#: truth for dispatch in decode, resize AND hash.
 NETPBM_MIMES = ("image/x-portable-pixmap", "image/x-portable-graymap")
 WAV_MIMES = ("audio/wav", "audio/x-wav")
 PNG_MIMES = ("image/png",)
@@ -230,24 +240,118 @@ def _make_png_encode():
     return png_encode
 
 
-def _make_image_pixels(png_pixels, jpeg_pixels, png_mimes):
-    """Shared 'mime -> color-sample array' dispatch for the decoded-image
-    feature paths (histogram + aHash): PNG alpha is stripped so an RGBA
-    re-save matches its RGB twin; grayscale stays 2-D.  A local function
-    (captured by value in the mapInPandas closures) like the codecs."""
+def _make_media_codec():
+    """The payload decoding of ``decode_media``, ``resize_media`` and
+    ``perceptual_hash``: one namespace of LOCAL functions (the by-value
+    shipping rationale of ``_make_png_pixels``) that also carries the
+    mime tuples, so it is the one source of dispatch for all three.
 
-    def _image_pixels(mime, data):
+    - ``rows(pdf)`` — the row guard: yields ``(id, data, mime)`` per
+      Arrow row.  A null id arrives as NaN (``int(NaN)`` kills the job —
+      the compress.py/cdc_chunk.py guard) and becomes None; a null
+      payload STRUCT (left-join miss) arrives as None (subscripting it
+      raises TypeError) and yields ``data = mime = None``.
+    - ``netpbm(data)`` — P6 PPM / P5 PGM -> ``(pixels h×w×ch, maxval)``.
+      The one netpbm parser: the raster is bounded to the declared
+      size (trailing bytes — an editor newline, a second image in the
+      stream — are ignored, a truncated raster errors), and a sample
+      above ``maxval`` errors like any other malformed input instead
+      of falling outside the histogram range, re-emitting an invalid
+      file from a resize, or hashing silently.
+    - ``image(mime, data)`` — netpbm, PNG or JPEG -> ``(pixels,
+      maxval)`` for the feature paths (histogram and aHash): PNG alpha
+      is stripped so an RGBA re-save matches its RGB twin (same
+      semantics as P6 vs P5), and grayscale JPEG stays 2-D.
+    - ``wav(data)`` — 16-bit PCM WAV -> int16 samples.
+    - ``gather(px, h, w)`` — nearest-neighbour resample of the first two
+      axes (vectorized row/column index gather).
+    - ``png_pixels`` / ``png_encode`` / ``jpeg_pixels`` /
+      ``jpeg_encode`` — the codecs themselves (resize keeps PNG alpha
+      and re-encodes).
+    """
+    import io as _io
+    import re as _re
+    import wave as _wave
+    from types import SimpleNamespace
+
+    import numpy as _np
+
+    netpbm_mimes, png_mimes = NETPBM_MIMES, PNG_MIMES
+    png_pixels, png_encode = _make_png_pixels(), _make_png_encode()
+    jpeg_encode, jpeg_pixels = make_jpeg_codec()
+    header_re = _re.compile(
+        rb"(P[56])\s+(?:#[^\n]*\s+)*(\d+)\s+(?:#[^\n]*\s+)*(\d+)"
+        rb"\s+(?:#[^\n]*\s+)*(\d+)\s"
+    )
+
+    def rows(pdf):
+        for rid, payload in zip(pdf["_id"], pdf["_payload"]):
+            rid = None if rid != rid else int(rid)
+            if payload is None:
+                yield rid, None, None
+            else:
+                yield rid, bytes(payload["data"] or b""), payload["meta"]["mime"]
+
+    def netpbm(data):
+        m = header_re.match(data)
+        if not m:
+            raise ValueError("malformed netpbm header")
+        w, h, maxval = int(m.group(2)), int(m.group(3)), int(m.group(4))
+        if not 0 < maxval < 256:
+            raise ValueError(f"unsupported netpbm maxval {maxval}")
+        ch = 3 if m.group(1) == b"P6" else 1
+        px = _np.frombuffer(data, dtype=_np.uint8, offset=m.end(), count=w * h * ch)
+        if px.size and int(px.max()) > maxval:
+            raise ValueError("netpbm sample exceeds declared maxval")
+        return px.reshape(h, w, ch), maxval
+
+    def image(mime, data):
+        if mime in netpbm_mimes:
+            return netpbm(data)
         if mime in png_mimes:
             px, ctype = png_pixels(data)
-            if ctype == 6:
-                return px[:, :, :3]
-            if ctype == 4:
-                return px[:, :, :1]
-            return px
+            # gray+alpha (4) and RGBA (6) carry alpha as the last channel
+            return (px[:, :, :-1] if ctype in (4, 6) else px), 255
         px, _nc = jpeg_pixels(data)
-        return px
+        return px, 255
 
-    return _image_pixels
+    def wav(data):
+        with _wave.open(_io.BytesIO(data)) as w:
+            if w.getsampwidth() != 2:
+                raise ValueError("only 16-bit PCM WAV supported")
+            frames = w.readframes(w.getnframes())
+        return _np.frombuffer(frames, dtype="<i2")
+
+    def gather(px, h, w):
+        ys = _np.arange(h) * px.shape[0] // h
+        xs = _np.arange(w) * px.shape[1] // w
+        return _np.ascontiguousarray(px[ys][:, xs])
+
+    return SimpleNamespace(
+        netpbm_mimes=netpbm_mimes,
+        png_mimes=png_mimes,
+        jpeg_mimes=JPEG_MIMES,
+        wav_mimes=WAV_MIMES,
+        image_mimes=netpbm_mimes + png_mimes + JPEG_MIMES,
+        rows=rows,
+        netpbm=netpbm,
+        image=image,
+        wav=wav,
+        gather=gather,
+        png_pixels=png_pixels,
+        png_encode=png_encode,
+        jpeg_pixels=jpeg_pixels,
+        jpeg_encode=jpeg_encode,
+    )
+
+
+def _map_payloads(df, id_col, payload_col, fn, schema) -> DataFrame:
+    """Narrow to (``_id`` long, ``_payload``) — the only columns the
+    Python side reads — and run ``fn`` over the Arrow batches."""
+    narrowed = df.select(
+        F.col(id_col).cast("long").alias("_id"), F.col(payload_col).alias("_payload")
+    )
+    return narrowed.mapInPandas(fn, schema)
 
 
 def decode_media(
@@ -284,71 +388,23 @@ def decode_media(
     # NB: the closure must stay self-contained (no references to this
     # module's globals) so cloudpickle ships it by value — executors then
     # need only pandas/numpy, not this package on their PYTHONPATH.
-    # Mime dispatch tuples are captured as plain locals for that reason;
-    # the PNG decoder comes from a factory so it is a local function too.
-    netpbm_mimes, wav_mimes, png_mimes = NETPBM_MIMES, WAV_MIMES, PNG_MIMES
-    jpeg_mimes = JPEG_MIMES
-    png_pixels = _make_png_pixels()
-    from eventbridge_etl_spark.operators.jpeg_codec import make_jpeg_codec
-
-    _, jpeg_pixels = make_jpeg_codec()
-    _image_pixels = _make_image_pixels(png_pixels, jpeg_pixels, PNG_MIMES)
+    # Everything it decodes with comes from the codec factory as locals.
+    media = _make_media_codec()
 
     def _decode_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-        import re as _re
-        import wave as _wave
-
         import numpy as _np
         import pandas as _pd
 
-        header_re = _re.compile(
-            rb"(P[56])\s+(?:#[^\n]*\s+)*(\d+)\s+(?:#[^\n]*\s+)*(\d+)"
-            rb"\s+(?:#[^\n]*\s+)*(\d+)\s"
-        )
-
-        def _netpbm_hist(data):
-            m = header_re.match(data)
-            if not m:
-                raise ValueError("malformed netpbm header")
-            w, h, maxval = int(m.group(2)), int(m.group(3)), int(m.group(4))
-            if not 0 < maxval < 256:
-                raise ValueError(f"unsupported netpbm maxval {maxval}")
-            ch = 3 if m.group(1) == b"P6" else 1
-            # bound to the declared raster: trailing bytes (editor
-            # newline, a second image in the stream) must not skew the
-            # histogram, and truncated rasters must error, not pass
-            px = _np.frombuffer(
-                data, dtype=_np.uint8, offset=m.end(), count=w * h * ch
-            )
-            if px.size and int(px.max()) > maxval:
-                # out-of-range samples would fall outside the bucket
-                # range and silently vanish from the normalized
-                # histogram — malformed input errors like the rest
-                raise ValueError("netpbm sample exceeds declared maxval")
-            idx = px.astype(_np.int64) * n_buckets // (maxval + 1)
+        def _hist(values, maxval):
+            # normalized histogram of integer samples over [0, maxval]
+            idx = values.reshape(-1).astype(_np.int64) * n_buckets // (maxval + 1)
             counts = _np.bincount(idx, minlength=n_buckets)[:n_buckets]
-            return counts / max(float(px.size), 1.0)
-
-        def _wav_hist(data):
-            with _wave.open(_io.BytesIO(data)) as w:
-                if w.getsampwidth() != 2:
-                    raise ValueError("only 16-bit PCM WAV supported")
-                frames = w.readframes(w.getnframes())
-            samples = _np.frombuffer(frames, dtype="<i2")
-            idx = (samples.astype(_np.int64) + 32768) * n_buckets // 65536
-            counts = _np.bincount(idx, minlength=n_buckets)[:n_buckets]
-            return counts / max(float(samples.size), 1.0)
+            return [float(x) for x in counts / max(float(idx.size), 1.0)]
 
         for pdf in batches:
             rows = {"id": [], "mime": [], "n_bytes": [], "features": []}
-            for rid, payload in zip(pdf["_id"], pdf["_payload"]):
-                # null id arrives as NaN (int(NaN) kills the job — the
-                # compress.py/cdc_chunk.py guard, review r7) and a null
-                # payload STRUCT (left-join miss) arrives as None
-                # (subscripting it raises TypeError)
-                rid = None if rid != rid else int(rid)
-                if payload is None:
+            for rid, data, mime in media.rows(pdf):
+                if data is None:
                     # left-join miss: no media — emit a null row rather
                     # than crashing (or faking an empty decode)
                     rows["id"].append(rid)
@@ -356,30 +412,18 @@ def decode_media(
                     rows["n_bytes"].append(0)
                     rows["features"].append(None)
                     continue
-                data = bytes(payload["data"] or b"")
-                mime = payload["meta"]["mime"]
                 if fake:
                     counts = [0] * n_buckets
                     for b in data:
                         counts[b % n_buckets] += 1
                     total = float(sum(counts)) or 1.0
                     feats = [c / total for c in counts]
-                elif mime in netpbm_mimes:
-                    feats = [float(x) for x in _netpbm_hist(data)]
-                elif mime in png_mimes or mime in jpeg_mimes:
-                    # intensity histogram over COLOR samples (one block
-                    # for both codecs — r7 review simplification); the
-                    # PNG alpha channel is dropped so an RGBA re-save
-                    # matches its RGB twin (same semantics as P6 vs P5)
-                    px = _image_pixels(mime, data)
-                    flat = px.reshape(-1).astype(_np.int64)
-                    idx = flat * n_buckets // 256
-                    counts = _np.bincount(idx, minlength=n_buckets)[:n_buckets]
-                    feats = [
-                        float(x) for x in counts / max(float(flat.size), 1.0)
-                    ]
-                elif mime in wav_mimes:
-                    feats = [float(x) for x in _wav_hist(data)]
+                elif mime in media.image_mimes:
+                    # intensity histogram over COLOR samples, one block
+                    # for netpbm, PNG and JPEG
+                    feats = _hist(*media.image(mime, data))
+                elif mime in media.wav_mimes:
+                    feats = _hist(media.wav(data).astype(_np.int64) + 32768, 65535)
                 else:
                     raise NotImplementedError(
                         f"no codec for mime {mime!r} in this environment; "
@@ -391,10 +435,7 @@ def decode_media(
                 rows["features"].append(feats)
             yield _pd.DataFrame(rows)
 
-    narrowed = df.select(
-        F.col(id_col).cast("long").alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    return narrowed.mapInPandas(_decode_batch, out_schema)
+    return _map_payloads(df, id_col, payload_col, _decode_batch, out_schema)
 
 
 def resize_media(
@@ -431,79 +472,43 @@ def resize_media(
         ]
     )
     target_area = max(target_width * target_height, 1)
-    # captured by value (see decode_media)
-    netpbm_mimes, png_mimes, jpeg_mimes = NETPBM_MIMES, PNG_MIMES, JPEG_MIMES
-    png_pixels, png_encode = _make_png_pixels(), _make_png_encode()
-    from eventbridge_etl_spark.operators.jpeg_codec import make_jpeg_codec
-
-    jpeg_encode, jpeg_pixels = make_jpeg_codec()
+    media = _make_media_codec()  # captured by value (see decode_media)
 
     def _resize_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import math as _math
-        import re as _re
 
-        import numpy as _np
         import pandas as _pd
-
-        header_re = _re.compile(
-            rb"(P[56])\s+(?:#[^\n]*\s+)*(\d+)\s+(?:#[^\n]*\s+)*(\d+)"
-            rb"\s+(?:#[^\n]*\s+)*(\d+)\s"
-        )
-
-        def _netpbm_resize(data):
-            m = header_re.match(data)
-            if not m:
-                raise ValueError("malformed netpbm header")
-            magic, w, h, maxval = (
-                m.group(1), int(m.group(2)), int(m.group(3)), int(m.group(4))
-            )
-            if not 0 < maxval < 256:
-                raise ValueError(f"unsupported netpbm maxval {maxval}")
-            ch = 3 if magic == b"P6" else 1
-            px = _np.frombuffer(
-                data, dtype=_np.uint8, offset=m.end(), count=w * h * ch
-            ).reshape(h, w, ch)
-            ys = _np.arange(target_height) * h // target_height
-            xs = _np.arange(target_width) * w // target_width
-            out = px[ys][:, xs]
-            header = b"%s\n%d %d\n%d\n" % (magic, target_width, target_height, maxval)
-            return header + out.tobytes()
 
         for pdf in batches:
             rows = {"id": [], "data": [], "mime": [], "width": [], "height": []}
-            for rid, payload in zip(pdf["_id"], pdf["_payload"]):
-                # null id arrives as NaN (int(NaN) kills the job — the
-                # compress.py/cdc_chunk.py guard, review r7) and a null
-                # payload STRUCT (left-join miss) arrives as None
-                # (subscripting it raises TypeError)
-                rid = None if rid != rid else int(rid)
-                if payload is None:
+            for rid, data, mime in media.rows(pdf):
+                if data is None:
                     rows["id"].append(rid)
                     rows["data"].append(None)
                     rows["mime"].append(None)
                     rows["width"].append(target_width)
                     rows["height"].append(target_height)
                     continue
-                data = bytes(payload["data"] or b"")
-                mime = payload["meta"]["mime"]
                 if fake:
                     stride = max(1, _math.ceil(len(data) / target_area))
                     out = data[::stride]
-                elif mime in netpbm_mimes:
-                    out = _netpbm_resize(data)
-                elif mime in png_mimes:
-                    px, _ctype = png_pixels(data)
-                    ys = _np.arange(target_height) * px.shape[0] // target_height
-                    xs = _np.arange(target_width) * px.shape[1] // target_width
+                elif mime in media.netpbm_mimes:
+                    px, maxval = media.netpbm(data)
+                    magic = b"P6" if px.shape[2] == 3 else b"P5"
+                    out = b"%s\n%d %d\n%d\n" % (
+                        magic, target_width, target_height, maxval
+                    ) + media.gather(px, target_height, target_width).tobytes()
+                elif mime in media.png_mimes:
+                    px, _ctype = media.png_pixels(data)
                     # paletted input re-encodes as plain RGB (palette
                     # expansion happened in the decoder); alpha survives
-                    out = png_encode(_np.ascontiguousarray(px[ys][:, xs]))
-                elif mime in jpeg_mimes:
-                    px, _nc = jpeg_pixels(data)
-                    ys = _np.arange(target_height) * px.shape[0] // target_height
-                    xs = _np.arange(target_width) * px.shape[1] // target_width
+                    out = media.png_encode(media.gather(px, target_height, target_width))
+                elif mime in media.jpeg_mimes:
+                    px, _nc = media.jpeg_pixels(data)
                     # fixed quality 90, 4:4:4 — deterministic re-encode
-                    out = jpeg_encode(_np.ascontiguousarray(px[ys][:, xs]), 90)
+                    out = media.jpeg_encode(
+                        media.gather(px, target_height, target_width), 90
+                    )
                 else:
                     raise NotImplementedError(
                         f"no codec for mime {mime!r} in this environment; "
@@ -516,10 +521,7 @@ def resize_media(
                 rows["height"].append(target_height)
             yield _pd.DataFrame(rows)
 
-    narrowed = df.select(
-        F.col(id_col).cast("long").alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    resized = narrowed.mapInPandas(_resize_batch, out_schema)
+    resized = _map_payloads(df, id_col, payload_col, _resize_batch, out_schema)
     return resized.select(
         "id",
         F.struct(
@@ -585,26 +587,11 @@ def perceptual_hash(
     out_schema = T.StructType(
         [T.StructField("id", T.LongType()), T.StructField("phash", T.LongType())]
     )
-    netpbm_mimes, wav_mimes, png_mimes = NETPBM_MIMES, WAV_MIMES, PNG_MIMES
-    jpeg_mimes = JPEG_MIMES
-    png_pixels = _make_png_pixels()
-    from eventbridge_etl_spark.operators.jpeg_codec import make_jpeg_codec
-
-    _, jpeg_pixels = make_jpeg_codec()
-    _image_pixels = _make_image_pixels(png_pixels, jpeg_pixels, PNG_MIMES)
+    media = _make_media_codec()  # captured by value (see decode_media)
 
     def _hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-        import re as _re
-        import wave as _wave
-
         import numpy as _np
         import pandas as _pd
-
-        header_re = _re.compile(
-            rb"(P[56])\s+(?:#[^\n]*\s+)*(\d+)\s+(?:#[^\n]*\s+)*(\d+)"
-            rb"\s+(?:#[^\n]*\s+)*(\d+)\s"
-        )
 
         def _pack(bits):
             # bits: (64,) bool, MSB-first -> signed int64
@@ -629,64 +616,25 @@ def perceptual_hash(
             nz = counts > 0
             return _pack((means > means[nz].mean()) & nz)
 
-        def _netpbm_hash(data):
-            m = header_re.match(data)
-            if not m:
-                raise ValueError("malformed netpbm header")
-            w, h, maxval = int(m.group(2)), int(m.group(3)), int(m.group(4))
-            if not 0 < maxval < 256:
-                raise ValueError(f"unsupported netpbm maxval {maxval}")
-            ch = 3 if m.group(1) == b"P6" else 1
-            px = _np.frombuffer(
-                data, dtype=_np.uint8, offset=m.end(), count=w * h * ch
-            ).reshape(h, w, ch)
-            gray = px.astype(_np.float64).mean(axis=2)
-            ys = (_np.arange(8) * h) // 8
-            xs = (_np.arange(8) * w) // 8
-            cells = gray[ys][:, xs].ravel()
+        def _image_hash(px):
+            # channel-mean gray, 8x8 gather, threshold at the cell mean
+            gray = px.astype(_np.float64)
+            if gray.ndim == 3:
+                gray = gray.mean(axis=2)
+            cells = media.gather(gray, 8, 8).ravel()
             return _pack(cells > cells.mean())
-
-        def _wav_hash(data):
-            with _wave.open(_io.BytesIO(data)) as w:
-                if w.getsampwidth() != 2:
-                    raise ValueError("only 16-bit PCM WAV supported")
-                frames = w.readframes(w.getnframes())
-            return _cells_hash(_np.frombuffer(frames, dtype="<i2"))
 
         for pdf in batches:
             ids, hashes = [], []
-            for rid, payload in zip(pdf["_id"], pdf["_payload"]):
-                # null id arrives as NaN (int(NaN) kills the job — the
-                # compress.py/cdc_chunk.py guard, review r7) and a null
-                # payload STRUCT (left-join miss) arrives as None
-                # (subscripting it raises TypeError)
-                rid = None if rid != rid else int(rid)
-                if payload is None:
-                    payload = {"data": b"", "meta": {"mime": ""}}
-                data = bytes(payload["data"] or b"")
-                mime = payload["meta"]["mime"]
+            for rid, data, mime in media.rows(pdf):
                 if not data:
                     ph = 0
                 elif fake:
                     ph = _cells_hash(_np.frombuffer(data, dtype=_np.uint8))
-                elif mime in netpbm_mimes:
-                    ph = _netpbm_hash(data)
-                elif mime in png_mimes or mime in jpeg_mimes:
-                    # one aHash block for both codecs (r7 review
-                    # simplification): channel-mean gray, 8x8 gather,
-                    # threshold against the cell mean
-                    px = _image_pixels(mime, data)
-                    gray = (
-                        px.astype(_np.float64)
-                        if px.ndim == 2
-                        else px.astype(_np.float64).mean(axis=2)
-                    )
-                    ys = (_np.arange(8) * gray.shape[0]) // 8
-                    xs = (_np.arange(8) * gray.shape[1]) // 8
-                    cells = gray[ys][:, xs].ravel()
-                    ph = _pack(cells > cells.mean())
-                elif mime in wav_mimes:
-                    ph = _wav_hash(data)
+                elif mime in media.image_mimes:
+                    ph = _image_hash(media.image(mime, data)[0])
+                elif mime in media.wav_mimes:
+                    ph = _cells_hash(media.wav(data))
                 else:
                     raise NotImplementedError(
                         f"no codec for mime {mime!r} in this environment; "
@@ -696,10 +644,7 @@ def perceptual_hash(
                 hashes.append(ph)
             yield _pd.DataFrame({"id": ids, "phash": hashes})
 
-    narrowed = df.select(
-        F.col(id_col).cast("long").alias("_id"), F.col(payload_col).alias("_payload")
-    )
-    return narrowed.mapInPandas(_hash_batch, out_schema)
+    return _map_payloads(df, id_col, payload_col, _hash_batch, out_schema)
 
 
 def phash_near_dup_pairs(

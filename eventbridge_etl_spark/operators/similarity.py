@@ -1,12 +1,19 @@
 """Similarity search over embedding columns (E2): exact brute-force
 cosine top-k as the correctness baseline, random-hyperplane LSH
-bucketing as the approximate scale path.
+bucketing, IVF cells and product quantization as the approximate scale
+paths.
 
 Vector arithmetic is pure higher-order-function SQL (zip_with +
 aggregate) — JVM-side, no Python, no UDF.  At 100 TB the brute-force
 path is a broadcast of the (small) query set against a scan of the
 corpus — linear, shuffle-free until the final per-query top-k; the LSH
 path prunes the corpus scan to matching buckets first.
+
+Shared kernels: every ranking in this module — the top-k tail of all
+five ANN operators and the IVF cell assignment and probe selection —
+is ``_top_n`` (rounded score, ties to the lower id, first n per key),
+and both IVF operators pick their cells through ``_nearest_cells`` from
+the same default centroids (``_lowest_id_centroids``).
 """
 
 from __future__ import annotations
@@ -40,6 +47,47 @@ def cosine(a: Column, b: Column) -> Column:
     return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b) / denom)
 
 
+def _top_n(
+    df: DataFrame, key: str, score: str, descending: bool, tiebreak: str, n: int
+) -> DataFrame:
+    """The first ``n`` rows per ``key`` by ``score`` (``descending`` or
+    ascending), ties to the lower ``tiebreak``, numbered in ``rank``.
+
+    Scores are rounded by the callers before ranking (the registry's
+    cross-engine ranking contract), so the order is total and portable.
+    The row_number window under a rank filter compiles to
+    WindowGroupLimit — a partial per-partition top-n before the shuffle.
+    """
+    order = F.col(score).desc() if descending else F.col(score)
+    w = Window.partitionBy(key).orderBy(order, F.col(tiebreak))
+    return df.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= n)
+
+
+def _lowest_id_centroids(corpus: DataFrame, nlist: int, id_col: str, vec_col: str) -> DataFrame:
+    """Default IVF coarse centroids: the corpus rows with the ``nlist``
+    lowest ids, as (_cent_id, _cent)."""
+    return (
+        corpus.orderBy(id_col)
+        .limit(nlist)
+        .select(F.col(id_col).alias("_cent_id"), F.col(vec_col).alias("_cent"))
+    )
+
+
+def _nearest_cells(
+    df: DataFrame, centroids: DataFrame, key: str, vec: str, n: int, *keep: str
+) -> DataFrame:
+    """The ``n`` most cosine-similar centroids per ``key`` (6dp, ties to
+    the lower centroid id) as (key, _cell, *keep): ``n = 1`` is the cell
+    assignment of a corpus vector, ``n = nprobe`` the probe selection of
+    a query.  Centroids are broadcast into the cross join."""
+    scored = df.crossJoin(F.broadcast(centroids)).withColumn(
+        "_ccos", F.round(cosine(F.col(vec), F.col("_cent")), 6)
+    )
+    return _top_n(scored, key, "_ccos", True, "_cent_id", n).select(
+        key, F.col("_cent_id").alias("_cell"), *keep
+    )
+
+
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,
@@ -64,13 +112,8 @@ def cosine_topk_bruteforce(
         .crossJoin(F.broadcast(q))
         .withColumn("cosine", F.round(cosine(F.col("_qv"), F.col("_cv")), 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _top_n(scored, "query_id", "cosine", True, "neighbor_id", k).select(
+        "query_id", "neighbor_id", "cosine", "rank"
     )
 
 
@@ -117,40 +160,17 @@ def cosine_topk_ivf(
     )
     q = queries.select(F.col(query_id_col).alias("query_id"), F.col(vec_col).alias("_qv"))
     if centroids is None:
-        centroids = (
-            corpus.orderBy(id_col)
-            .limit(nlist)
-            .select(F.col(id_col).alias("_cent_id"), F.col(vec_col).alias("_cent"))
-        )
+        centroids = _lowest_id_centroids(corpus, nlist, id_col, vec_col)
     else:
         centroids = centroids.select(
             F.col(centroids.columns[0]).alias("_cent_id"),
             F.col(centroids.columns[1]).alias("_cent"),
         )
 
-    # (1) cell assignment: argmax-cosine centroid per corpus vector
-    w_assign = Window.partitionBy("neighbor_id").orderBy(
-        F.col("_ccos").desc(), F.col("_cent_id")
-    )
-    assigned = (
-        c.crossJoin(F.broadcast(centroids))
-        .withColumn("_ccos", F.round(cosine(F.col("_cv"), F.col("_cent")), 6))
-        .withColumn("_rn", F.row_number().over(w_assign))
-        .filter(F.col("_rn") == 1)
-        .select("neighbor_id", "_cv", F.col("_cent_id").alias("_cell"))
-    )
-
+    # (1) cell assignment: argmax-cosine centroid per corpus vector;
     # (2) probe selection: nprobe nearest centroids per query
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("_ccos").desc(), F.col("_cent_id")
-    )
-    probed = (
-        q.crossJoin(F.broadcast(centroids))
-        .withColumn("_ccos", F.round(cosine(F.col("_qv"), F.col("_cent")), 6))
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .filter(F.col("_rn") <= nprobe)
-        .select("query_id", "_qv", F.col("_cent_id").alias("_cell"))
-    )
+    assigned = _nearest_cells(c, centroids, "neighbor_id", "_cv", 1, "_cv")
+    probed = _nearest_cells(q, centroids, "query_id", "_qv", nprobe, "_qv")
 
     # (3) exact re-rank within probed cells.  The probe side is
     # queries x nprobe rows — the small side BY DESIGN (same contract as
@@ -166,12 +186,10 @@ def cosine_topk_ivf(
     scored = assigned.join(F.broadcast(probed), "_cell").withColumn(
         "cosine", F.round(cosine(F.col("_qv"), F.col("_cv")), 6)
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _top_n(scored, "query_id", "cosine", True, "neighbor_id", k).select(
+        "query_id", "neighbor_id", "cosine", "rank"
     )
+
 
 def _hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     """Deterministic pseudo-random unit hyperplanes (literal constants in
@@ -275,11 +293,8 @@ def cosine_topk_lsh(
         .select("query_id", "neighbor_id", "cosine")
         .distinct()
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+    return _top_n(scored, "query_id", "cosine", True, "neighbor_id", k).select(
+        "query_id", "neighbor_id", "cosine", "rank"
     )
 
 
@@ -554,9 +569,14 @@ def semantic_dedup(
     the corpus is scanned and nearest-centroid-folded once instead of
     four times.  Measured trade at sf0.1 (unskewed fixture, ~0.2 s on a
     1.2 s non-headline gate): the salting+persist insurance costs ~15%
-    locally and is kept deliberately — the skewed-fixture measurement
-    in OPTIMIZATION_r13.md is the case it exists for, and sum-of-scans
-    dominates at scale.  Returns (id, cluster, kept boolean).
+    locally and is kept deliberately — the skewed case is the one it
+    exists for (synthetic fixture, 90% of the vectors in one tight
+    blob, full-output digests identical: in the shuffle-join regime,
+    ``autoBroadcastJoinThreshold=-1`` with 6k vectors and
+    salt_target=512, unsalted 171.0 s vs salted 15.7 s — one hot-key
+    task vs 121 balanced cells; broadcast regime, 24k vectors, 148.3 s
+    vs 120.8 s), and sum-of-scans dominates at scale.  Returns (id,
+    cluster, kept boolean).
     """
     cents = kmeans_fit(df, k, iters, id_col, vec_col)
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
@@ -838,13 +858,8 @@ def pq_topk_adc(
         .crossJoin(F.broadcast(q))
         .withColumn("approx_sqdist", F.round(approx, 6))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sqdist"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "approx_sqdist", "rank")
+    return _top_n(scored, "query_id", "approx_sqdist", False, "neighbor_id", k).select(
+        "query_id", "neighbor_id", "approx_sqdist", "rank"
     )
 
 
@@ -891,56 +906,26 @@ def pq_topk_ivf_adc(
     if any(not cb for cb in codebooks):
         return _empty_adc_result(corpus, queries, id_col, query_id_col)
     m = len(codebooks)
-    centroids = (
-        corpus.orderBy(id_col)
-        .limit(nlist)
-        .select(F.col(id_col).alias("_cent_id"), F.col(vec_col).alias("_cent"))
-    )
+    codes = [f"_code_{j}" for j in range(m)]
+    subvecs = [f"_q_{j}" for j in range(m)]
+    centroids = _lowest_id_centroids(corpus, nlist, id_col, vec_col)
 
     # corpus side: PQ codes + coarse cell, raw vector DROPPED after
     enc = pq_encode(corpus, codebooks, subdim, id_col, vec_col)
     c = _fan_out(
         enc.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.col(vec_col).alias("_cv"),
-            *[F.col(f"_code_{j}") for j in range(m)],
+            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("_cv"), *codes
         )
     )
-    w_assign = Window.partitionBy("neighbor_id").orderBy(
-        F.col("_ccos").desc(), F.col("_cent_id")
-    )
-    assigned = (
-        c.crossJoin(F.broadcast(centroids))
-        .withColumn("_ccos", F.round(cosine(F.col("_cv"), F.col("_cent")), 6))
-        .withColumn("_rn", F.row_number().over(w_assign))
-        .filter(F.col("_rn") == 1)
-        .select(
-            "neighbor_id",
-            F.col("_cent_id").alias("_cell"),
-            *[F.col(f"_code_{j}") for j in range(m)],
-        )
-    )
+    assigned = _nearest_cells(c, centroids, "neighbor_id", "_cv", 1, *codes)
 
     # query side: raw subvectors for ADC + probed cells
     q = queries.select(
         F.col(query_id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
-        *[_subvec(vec_col, j, subdim).alias(f"_q_{j}") for j in range(m)],
+        *[_subvec(vec_col, j, subdim).alias(subvecs[j]) for j in range(m)],
     )
-    w_probe = Window.partitionBy("query_id").orderBy(
-        F.col("_ccos").desc(), F.col("_cent_id")
-    )
-    probed = (
-        q.crossJoin(F.broadcast(centroids))
-        .withColumn("_ccos", F.round(cosine(F.col("_qv"), F.col("_cent")), 6))
-        .withColumn("_rn", F.row_number().over(w_probe))
-        .filter(F.col("_rn") <= nprobe)
-        .select(
-            "query_id",
-            F.col("_cent_id").alias("_cell"),
-            *[F.col(f"_q_{j}") for j in range(m)],
-        )
-    )
+    probed = _nearest_cells(q, centroids, "query_id", "_qv", nprobe, *subvecs)
 
     # probe side broadcast for the same reason as cosine_topk_ivf: it is
     # queries x nprobe rows by design, and without the hint the planner
@@ -949,11 +934,6 @@ def pq_topk_ivf_adc(
     scored = assigned.join(F.broadcast(probed), "_cell").withColumn(
         "approx_sqdist", F.round(_adc_expr(codebooks), 6)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_sqdist"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "approx_sqdist", "rank")
+    return _top_n(scored, "query_id", "approx_sqdist", False, "neighbor_id", k).select(
+        "query_id", "neighbor_id", "approx_sqdist", "rank"
     )

@@ -30,6 +30,28 @@ from pyspark.sql import functions as F
 from eventbridge_etl_spark.operators.rounding import decimal_sum, half_up_div
 
 
+def require_tiebreak(df: DataFrame, col: str) -> None:
+    """Raise unless ``col`` — the unique column that totals the order
+    when timestamps tie — is in ``df``: every event-stream operator
+    promises a deterministic (ts, tiebreak) order."""
+    if col not in df.columns:
+        raise ValueError(
+            f"tiebreak column {col!r} not in input; pass a unique "
+            "column that breaks timestamp ties (determinism requires a "
+            "total order)"
+        )
+
+
+def _ts_id_order_key(ts_col: str, id_col: str) -> Column:
+    """Fixed-width ``(epoch_micros, id)`` string whose order is the
+    numeric (ts, id) order: both fields zero-padded to 20 chars (see
+    ``gap_fill_hourly`` for the width and epoch >= 0 preconditions)."""
+    return F.concat(
+        F.lpad(F.unix_micros(F.col(ts_col)).cast("string"), 20, "0"),
+        F.lpad(F.col(id_col).cast("string"), 20, "0"),
+    )
+
+
 def gap_fill_hourly(
     events: DataFrame,
     key_col: str = "user_id",
@@ -55,18 +77,10 @@ def gap_fill_hourly(
     string order), which ``events`` fixtures and any modern event
     stream satisfy.
     """
-    if id_col not in events.columns:
-        raise ValueError(
-            f"tiebreak column {id_col!r} not in input; pass a unique "
-            "column that breaks timestamp ties (determinism requires a "
-            "total order)"
-        )
+    require_tiebreak(events, id_col)
     k, ts, v = F.col(key_col), F.col(ts_col), F.col(value_col)
     hour = F.date_trunc("hour", ts)
-    order_key = F.concat(
-        F.lpad(F.unix_micros(ts).cast("string"), 20, "0"),
-        F.lpad(F.col(id_col).cast("string"), 20, "0"),
-    )
+    order_key = _ts_id_order_key(ts_col, id_col)
 
     bounds = events.groupBy(k.alias(key_col)).agg(
         F.date_trunc("hour", F.min(ts)).alias("h0"),
@@ -122,16 +136,8 @@ def ohlc_bars(
     Output cardinality is groups × buckets, bounded by span/granularity
     regardless of event volume.
     """
-    if id_col not in events.columns:
-        raise ValueError(
-            f"tiebreak column {id_col!r} not in input; pass a unique "
-            "column that breaks timestamp ties (determinism requires a "
-            "total order)"
-        )
-    order_key = F.concat(
-        F.lpad((F.unix_micros(F.col(ts_col))).cast("string"), 20, "0"),
-        F.lpad(F.col(id_col).cast("string"), 20, "0"),
-    )
+    require_tiebreak(events, id_col)
+    order_key = _ts_id_order_key(ts_col, id_col)
     v = F.col(value_col)
     return (
         events.withColumn("_ok", order_key)
@@ -181,12 +187,7 @@ def counter_increase(
     partition-local lag window + one hash aggregate on the same key —
     a single shuffle.
     """
-    if tiebreak_col not in events.columns:
-        raise ValueError(
-            f"tiebreak column {tiebreak_col!r} not in input; pass a unique "
-            "column that breaks timestamp ties (determinism requires a "
-            "total order)"
-        )
+    require_tiebreak(events, tiebreak_col)
     v = F.col(value_col)
     # PromQL increase() SKIPS missing samples: deltas are computed over
     # consecutive NON-NULL observations.  Unfiltered, one null value
@@ -260,12 +261,7 @@ def rolling_zscore(
     explicitly enforces its presence.
     """
     if tiebreak_col is not None:
-        if tiebreak_col not in events.columns:
-            raise ValueError(
-                f"tiebreak column {tiebreak_col!r} not in input; pass a "
-                "unique column that breaks timestamp ties (determinism "
-                "requires a total order)"
-            )
+        require_tiebreak(events, tiebreak_col)
         order = [ts_col, tiebreak_col]
     elif "event_id" in events.columns:
         order = [ts_col, "event_id"]
@@ -341,12 +337,7 @@ def sessionize(
     shuffle (asserted in tests).  Session state is never materialized
     driver-side; output cardinality is the session count.
     """
-    if tiebreak_col not in events.columns:
-        raise ValueError(
-            f"tiebreak column {tiebreak_col!r} not in input; pass a unique "
-            "column that breaks timestamp ties (determinism requires a "
-            "total order)"
-        )
+    require_tiebreak(events, tiebreak_col)
     epoch = F.unix_timestamp(F.col(ts_col))
     w = Window.partitionBy(key_col).orderBy(ts_col, tiebreak_col)
     run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -495,12 +486,7 @@ def locf_fill(
     contract is shared with the other event-stream operators: ts ties
     without a total order would make "last" nondeterministic.
     """
-    if tiebreak_col not in events.columns:
-        raise ValueError(
-            f"tiebreak column {tiebreak_col!r} not in input; pass a unique "
-            "column that breaks timestamp ties (determinism requires a "
-            "total order)"
-        )
+    require_tiebreak(events, tiebreak_col)
     w = (
         Window.partitionBy(key_col)
         .orderBy(ts_col, tiebreak_col)
@@ -530,12 +516,7 @@ def interpolate_fill(
     an IEEE expression on integer epoch-µs distances, rounded to 6 —
     no join, no grid, row count unchanged.
     """
-    if tiebreak_col not in events.columns:
-        raise ValueError(
-            f"tiebreak column {tiebreak_col!r} not in input; pass a unique "
-            "column that breaks timestamp ties (determinism requires a "
-            "total order)"
-        )
+    require_tiebreak(events, tiebreak_col)
     us = F.unix_micros(F.col(ts_col))
     v = F.col(value_col)
     base = Window.partitionBy(key_col).orderBy(ts_col, tiebreak_col)

@@ -32,10 +32,17 @@ list):
 - The split regex ``\\s+`` is ASCII-only in BOTH engines (Java regex
   and RE2) — no alignment needed.
 
+It also holds oracle SQL that gates in different modules share
+(``ROLLUP_RECOMPUTE_ORACLE``).
+
 This module is import-cycle-free on purpose: query modules import each
 other lazily to avoid cycles, but every one of them can import these
-plain strings at module level.
+plain strings at module level (its one import, ``operators.rounding``,
+imports only pyspark).
 """
+
+from eventbridge_etl_spark.operators.rounding import half_up_div_sql
+
 
 #: Java/Spark-aligned lower() over the documents.text column:
 #: final-sigma pre-guard, then İ pre-replace, then lower().
@@ -153,3 +160,28 @@ def tfidf_weighting_ctes(toks_cte: str = "toks", max_df: int | None = None) -> s
       SELECT w.id, token, round(w / nrm.nrm, 9) AS u
       FROM w JOIN nrm ON nrm.id = w.id WHERE nrm.nrm > 0
     )"""
+
+
+#: The full-recompute oracle of the hourly event rollup
+#: (``operators/incremental``): ``streaming_rollup_merge`` (two
+#: micro-batch epochs) and ``rollup_incremental_merge`` (state merged
+#: with a raw delta) must both end equal to it.
+ROLLUP_RECOMPUTE_ORACLE = f"""
+    SELECT date_trunc('hour', ts) AS hour, event_type,
+           COUNT(*) AS n_events,
+           CAST(ROUND(SUM(CAST(value AS DECIMAL(28,6))), 2) AS DOUBLE) AS sum_value,
+           -- integer HALF_UP micro-unit mean, mirroring publish_rollup
+           -- (see operators/rounding.py; real half edge at sf0.1)
+           CASE WHEN COUNT(*) > 0 AND SUM(CAST(value AS DECIMAL(28,6))) IS NOT NULL THEN
+             CAST(CAST({half_up_div_sql(
+                 "CAST(SUM(CAST(value AS DECIMAL(28,6))) * 1000000 AS BIGINT)",
+                 "COUNT(*) * 100",
+             )} AS BIGINT) AS DOUBLE) / 10000.0
+           END AS avg_value,
+           MIN(value) AS min_value,
+           MAX(value) AS max_value
+    -- a time-bucketed rollup has no bucket for a NULL event time
+    -- (hourly_rollup_state excludes them by contract)
+    FROM events WHERE ts IS NOT NULL
+    GROUP BY 1, 2
+    """

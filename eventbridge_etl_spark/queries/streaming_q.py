@@ -28,6 +28,7 @@ from eventbridge_etl_spark.operators.rounding import (
     half_up_div_sql,
 )
 from eventbridge_etl_spark.queries import query
+from eventbridge_etl_spark.queries._sqlfrag import ROLLUP_RECOMPUTE_ORACLE
 from eventbridge_etl_spark.sources.tables import load_tables
 from eventbridge_etl_spark.streaming.file_pipeline import (
     dedup_within_watermark,
@@ -301,28 +302,7 @@ def streaming_running_totals(spark, sf_dir):
     )
 
 
-@query(
-    "streaming_rollup_merge",
-    oracle=f"""
-    SELECT date_trunc('hour', ts) AS hour, event_type,
-           COUNT(*) AS n_events,
-           CAST(ROUND(SUM(CAST(value AS DECIMAL(28,6))), 2) AS DOUBLE) AS sum_value,
-           -- integer HALF_UP micro-unit mean, mirroring publish_rollup
-           -- (see operators/rounding.py; real half edge at sf0.1)
-           CASE WHEN COUNT(*) > 0 AND SUM(CAST(value AS DECIMAL(28,6))) IS NOT NULL THEN
-             CAST(CAST({half_up_div_sql(
-                 "CAST(SUM(CAST(value AS DECIMAL(28,6))) * 1000000 AS BIGINT)",
-                 "COUNT(*) * 100",
-             )} AS BIGINT) AS DOUBLE) / 10000.0
-           END AS avg_value,
-           MIN(value) AS min_value,
-           MAX(value) AS max_value
-    -- a time-bucketed rollup has no bucket for a NULL event time
-    -- (hourly_rollup_state excludes them by contract)
-    FROM events WHERE ts IS NOT NULL
-    GROUP BY 1, 2
-    """,
-)
+@query("streaming_rollup_merge", oracle=ROLLUP_RECOMPUTE_ORACLE)
 def streaming_rollup_merge(spark, sf_dir):
     """The continuous aggregate (streaming/rollup.py) driver-gated: the
     events table lands as TWO files, each processed in its own

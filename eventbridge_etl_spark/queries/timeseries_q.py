@@ -25,6 +25,7 @@ from eventbridge_etl_spark.operators.timeseries import (
     sessionize,
 )
 from eventbridge_etl_spark.queries import query
+from eventbridge_etl_spark.queries._sqlfrag import ROLLUP_RECOMPUTE_ORACLE
 from eventbridge_etl_spark.sources.tables import load_tables
 
 
@@ -318,28 +319,7 @@ def events_path_trigrams(spark, sf_dir):
     )
 
 
-@query(
-    "rollup_incremental_merge",
-    oracle=f"""
-    SELECT date_trunc('hour', ts) AS hour, event_type,
-           COUNT(*) AS n_events,
-           CAST(ROUND(SUM(CAST(value AS DECIMAL(28,6))), 2) AS DOUBLE) AS sum_value,
-           -- integer HALF_UP micro-unit mean, mirroring publish_rollup
-           -- (see operators/rounding.py; real half edge at sf0.1)
-           CASE WHEN COUNT(*) > 0 AND SUM(CAST(value AS DECIMAL(28,6))) IS NOT NULL THEN
-             CAST(CAST({half_up_div_sql(
-                 "CAST(SUM(CAST(value AS DECIMAL(28,6))) * 1000000 AS BIGINT)",
-                 "COUNT(*) * 100",
-             )} AS BIGINT) AS DOUBLE) / 10000.0
-           END AS avg_value,
-           MIN(value) AS min_value,
-           MAX(value) AS max_value
-    -- a time-bucketed rollup has no bucket for a NULL event time
-    -- (hourly_rollup_state excludes them by contract)
-    FROM events WHERE ts IS NOT NULL
-    GROUP BY 1, 2
-    """,
-)
+@query("rollup_incremental_merge", oracle=ROLLUP_RECOMPUTE_ORACLE)
 def rollup_incremental_merge(spark, sf_dir):
     """Incremental-maintenance correctness gate: the rollup built from
     the first 20 days MERGED with the last 10 days' raw delta must

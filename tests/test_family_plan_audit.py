@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import pytest
 
+from eventbridge_etl_spark import cache
 from eventbridge_etl_spark.plans.audit import plan_audit
 from eventbridge_etl_spark.queries import QUERIES, load_all
 
@@ -84,6 +85,10 @@ _CHECKS = {
 @pytest.mark.parametrize("family", sorted(FAMILY_RULES))
 def test_family_plan_shape(spark, family):
     name, *rules = FAMILY_RULES[family]
+    # the step __spark_entry__ runs before every gate: frames earlier
+    # tests persisted through scoped_persist would otherwise stay cached
+    # in the shared session and press on this plan's broadcasts
+    cache.release_tracked()
     df = QUERIES[name](spark, SF_DIR)
     df.collect()  # finalize the adaptive plan before auditing
     audit = plan_audit(df)

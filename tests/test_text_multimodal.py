@@ -533,15 +533,83 @@ def test_binary_source_streaming_drain(spark, tmp_path):
     }
 
 
-def test_decode_media_rejects_samples_above_maxval(spark):
+@pytest.mark.parametrize("op", ["decode_media", "resize_media", "perceptual_hash"])
+def test_decode_media_rejects_samples_above_maxval(spark, op):
     """Declared maxval 15 with a raster byte of 200: out-of-range
-    samples must error, not silently vanish from the histogram."""
+    samples must error in every operator — not silently vanish from the
+    histogram, re-emit an invalid file from a resize, or hash."""
+    from eventbridge_etl_spark.operators import multimodal as M
+
     bad = b"P5\n2 1\n15\n" + bytes([3, 200])
     df = spark.createDataFrame([(1, bytearray(bad))], "doc_id long, raw binary")
     wrapped = attach_payload(df, "raw", mime="image/x-portable-graymap")
+    run = {
+        "decode_media": lambda w: M.decode_media(w, "doc_id", fake=False),
+        "resize_media": lambda w: M.resize_media(w, "doc_id", 2, 1, fake=False),
+        "perceptual_hash": lambda w: M.perceptual_hash(w, "doc_id"),
+    }[op]
     with pytest.raises(Exception) as ei:
-        decode_media(wrapped, "doc_id", fake=False).collect()
+        run(wrapped).collect()
     assert "maxval" in str(ei.value)
+
+
+def test_media_closures_ship_by_value(spark, monkeypatch, tmp_path):
+    """Executors need only pandas and numpy: the function each media
+    operator hands to mapInPandas, pickled with pyspark's cloudpickle,
+    unpickles and runs in a child process that cannot import this
+    package, with the same output as in this process."""
+    import pickle
+    import subprocess
+    import sys
+
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    from eventbridge_etl_spark.operators.multimodal import (
+        perceptual_hash,
+        resize_media,
+    )
+
+    mime = "image/x-portable-pixmap"
+    wrapped, data = _payload_df(spark, "fixture_gradient.ppm", mime)
+    captured = []
+    cls = type(wrapped)
+    real = cls.mapInPandas
+
+    def spy(self, func, schema, *args, **kwargs):
+        captured.append(func)
+        return real(self, func, schema, *args, **kwargs)
+
+    monkeypatch.setattr(cls, "mapInPandas", spy)
+    decode_media(wrapped, "doc_id", fake=False, n_buckets=8)
+    resize_media(wrapped, "doc_id", 4, 3, fake=False)
+    perceptual_hash(wrapped, "doc_id")
+    assert len(captured) == 3
+
+    batch = pd.DataFrame(
+        {"_id": [1], "_payload": [{"data": data, "meta": {"mime": mime}}]}
+    )
+    child = (
+        "import importlib.util, pickle, sys\n"
+        "assert importlib.util.find_spec('eventbridge_etl_spark') is None\n"
+        "fns, batch = pickle.loads(sys.stdin.buffer.read())\n"
+        "out = [list(f(iter([batch]))) for f in fns]\n"
+        "assert not any(m.startswith('eventbridge_etl_spark') for m in sys.modules)\n"
+        "sys.stdout.buffer.write(pickle.dumps(out))\n"
+    )
+    proc = subprocess.run(
+        [sys.executable, "-I", "-c", child],
+        input=cloudpickle.dumps((captured, batch)),
+        capture_output=True,
+        cwd=tmp_path,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr.decode()[-2000:]
+    remote = pickle.loads(proc.stdout)
+    local = [list(f(iter([batch]))) for f in captured]
+    for got, expect in zip(remote, local):
+        assert len(got) == len(expect) == 1
+        pd.testing.assert_frame_equal(got[0], expect[0])
 
 
 def test_pii_phone_redacts_whole_digit_run(spark):
