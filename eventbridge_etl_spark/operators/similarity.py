@@ -13,7 +13,12 @@ Shared kernels: every ranking in this module — the top-k tail of all
 five ANN operators and the IVF cell assignment and probe selection —
 is ``_top_n`` (rounded score, ties to the lower id, first n per key),
 and both IVF operators pick their cells through ``_nearest_cells`` from
-the same default centroids (``_lowest_id_centroids``).
+the same default centroids (``_lowest_id_centroids``).  Centroid
+training is one Lloyd kernel, ``_lloyd``: k-means (``kmeans_fit``) is
+PQ training (``pq_train``) with one subspace.  Every nearest-codeword
+assignment (``kmeans_assign``, ``pq_encode``, each Lloyd step) is one
+expression, ``_nearest``, and every centroid mean, ``label_centroids``
+included, is rounded to ``CENTROID_DECIMALS``.
 """
 
 from __future__ import annotations
@@ -26,6 +31,11 @@ from pyspark.sql import functions as F
 
 from eventbridge_etl_spark.cache import scoped_persist
 from eventbridge_etl_spark.operators.partitioning import fan_out as _fan_out
+
+#: Decimals every centroid mean is rounded to, so float accumulation
+#: order (across engines, runs and partitionings) cannot flip a later
+#: boundary assignment.
+CENTROID_DECIMALS = 4
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -329,91 +339,41 @@ def quantize_embeddings_int8(
     )
 
 
+def _rounded_mean(c: str) -> Column:
+    """Mean of one centroid position as ``_av``, rounded to
+    ``CENTROID_DECIMALS`` (HALF_UP, as DuckDB's ROUND)."""
+    return F.round(F.avg(F.col(c).cast("double")), CENTROID_DECIMALS).alias("_av")
+
+
 def label_centroids(
-    df: DataFrame,
-    label_col: str = "label",
-    vec_col: str = "embedding",
-    impl: str = "builtin",
-    decimals: int = 4,
+    df: DataFrame, label_col: str = "label", vec_col: str = "embedding"
 ) -> DataFrame:
     """Per-label embedding centroid (element-wise mean) + group size —
     the class-prototype computation behind nearest-centroid dedup
     triage, IVF coarse quantizer training, and cluster drift checks.
 
-    Two implementations with identical output:
-
-    - ``builtin``: posexplode -> groupBy(label, pos) avg -> re-assemble
-      ordered array.  The per-position partial aggregation spreads one
-      label's rows across ALL partitions, so a skewed label (half the
-      corpus in one class) never serializes into one task — this is the
-      100 TB path.
-    - ``arrow``: ``groupBy(label).applyInPandas`` — one Arrow batch per
-      label through numpy.  Simpler, and the template for group-wise
-      logic that ISN'T expressible as built-ins; but a group = a task,
-      so it carries skew risk the builtin path doesn't.  Kept as the
-      reference implementation and exercised in tests/the oracle gate.
+    posexplode -> groupBy(label, pos) avg -> re-assemble the ordered
+    array.  The per-position partial aggregation spreads one label's
+    rows across ALL partitions, so a skewed label (half the corpus in
+    one class) never serializes into one task.
 
     NULL-vector rows cannot contribute to a mean and are dropped up
-    front on BOTH impls (the builtin's posexplode silently dropped
-    them already while still not counting them; the arrow path crashed
-    in np.stack — r7 adversarial-fixture finding), so ``n_vectors``
-    uniformly counts contributing vectors.  A NULL *label* remains its
-    own group, as in any GROUP BY.
+    front, so ``n_vectors`` counts contributing vectors.  A NULL
+    *label* remains its own group, as in any GROUP BY.
     """
-    df = df.filter(F.col(vec_col).isNotNull())
-    if impl == "builtin":
-        per_pos = (
-            df.select(
-                F.col(label_col), F.posexplode(F.col(vec_col)).alias("_pos", "_v")
-            )
-            .groupBy(label_col, "_pos")
-            .agg(
-                F.round(F.avg(F.col("_v").cast("double")), decimals).alias("_av"),
-                F.count("*").alias("_n"),
-            )
-        )
-        return (
-            per_pos.groupBy(label_col)
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("_pos", "_av"))),
-                    lambda s: s["_av"],
-                ).alias("centroid"),
-                F.first("_n").alias("n_vectors"),
-            )
-        )
-    if impl == "arrow":
-        import numpy as np
-        import pandas as pd
-
-        # label type derives from the input schema — hardcoding `int`
-        # broke string-labeled corpora on this path while the builtin
-        # impl accepted them (review finding r6)
-        label_type = df.schema[label_col].dataType.simpleString()
-        out_schema = (
-            f"{label_col} {label_type}, centroid array<double>, n_vectors bigint"
-        )
-
-        def _centroid(pdf: pd.DataFrame) -> pd.DataFrame:
-            mat = np.stack(pdf[vec_col].to_numpy()).astype("float64")
-            mean = mat.mean(axis=0)
-            # HALF_UP away from zero, matching Spark's F.round in the
-            # builtin impl and DuckDB's ROUND — np.round is half-EVEN
-            # and disagrees on exact half-boundary means (review r6;
-            # dyadic float32 embeddings with power-of-two counts can
-            # land exactly on .5 at the target decimal)
-            k = 10.0 ** decimals
-            cen = np.sign(mean) * np.floor(np.abs(mean) * k + 0.5) / k
-            return pd.DataFrame(
-                {
-                    label_col: [pdf[label_col].iloc[0]],
-                    "centroid": [cen.tolist()],
-                    "n_vectors": [len(pdf)],
-                }
-            )
-
-        return df.groupBy(label_col).applyInPandas(_centroid, out_schema)
-    raise ValueError(f"unknown impl: {impl!r} (want 'builtin' or 'arrow')")
+    per_pos = (
+        df.filter(F.col(vec_col).isNotNull())
+        .select(F.col(label_col), F.posexplode(F.col(vec_col)).alias("_pos", "_v"))
+        .groupBy(label_col, "_pos")
+        .agg(_rounded_mean("_v"), F.count("*").alias("_n"))
+    )
+    return per_pos.groupBy(label_col).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("_pos", "_av"))),
+            lambda s: s["_av"],
+        ).alias("centroid"),
+        F.first("_n").alias("n_vectors"),
+    )
 
 
 # ----------------------------------------------------------- k-means
@@ -443,20 +403,47 @@ def _centroid_struct_array(centroids: list[tuple[int, list[float]]]) -> Column:
     )
 
 
+def _subvec(vec_col: str, j: int, subdim: int) -> Column:
+    """Subspace ``j``'s slice of the vector, as doubles."""
+    return F.slice(
+        F.transform(F.col(vec_col), lambda x: x.cast("double")),
+        j * subdim + 1,
+        subdim,
+    )
+
+
+def _nearest(codebook: list[tuple[int, list[float]]], v: Column) -> Column:
+    """struct<d, cid>: the codeword of a non-empty ``codebook`` nearest
+    to the double array ``v`` (squared euclidean, ties to the lowest
+    cid) — every k-means and PQ assignment in this module.
+
+    ``array_min`` over struct<d,cid> IS the argmin — struct comparison
+    is lexicographic, so the tie-break is explicit and engine-portable.
+    The codebook is a plan literal, so assignment is map-only.
+    """
+    # NB: a (s, v=v) default-arg lambda would be read by pyspark as a
+    # TWO-parameter HOF lambda and receive the array INDEX as its second
+    # argument; pyspark invokes the lambda immediately at expression-
+    # build time, so a plain closure is safe.
+    return F.array_min(
+        F.transform(
+            _centroid_struct_array(codebook),
+            lambda s: F.struct(sq_dist(s["c"], v).alias("d"), s["cid"].alias("cid")),
+        )
+    )
+
+
 def kmeans_assign(
     df: DataFrame,
     centroids: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Assign each vector to its nearest centroid (squared euclidean,
-    ties to the lowest cluster id).
-
-    ``array_min`` over struct<d,cid> IS the argmin — struct comparison
-    is lexicographic, so the tie-break is explicit and engine-portable.
-    Map-only: no join, no shuffle; the centroid table rides along as a
-    plan literal (fine for the k <= a few thousand of a coarse
-    quantizer).  Adds ``cluster`` and ``sqdist`` (raw double) columns.
+    """Assign each vector to its nearest centroid (``_nearest``: squared
+    euclidean, ties to the lowest cluster id).  Map-only: no join, no
+    shuffle; the centroid table rides along as a plan literal (fine for
+    the k <= a few thousand of a coarse quantizer).  Adds ``cluster``
+    and ``sqdist`` (raw double) columns.
 
     An EMPTY centroid list (k-means over an empty corpus — r7
     empty-fixture crash: ``F.array()`` of zero structs cannot be
@@ -467,27 +454,82 @@ def kmeans_assign(
         return df.withColumn("cluster", F.lit(None).cast("int")).withColumn(
             "sqdist", F.lit(None).cast("double")
         )
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    scored = F.transform(
-        _centroid_struct_array(centroids),
-        lambda s: F.struct(sq_dist(s["c"], v).alias("d"), s["cid"].alias("cid")),
-    )
-    best = F.array_min(scored)
+    best = _nearest(centroids, F.transform(F.col(vec_col), lambda x: x.cast("double")))
     return df.withColumn("cluster", best["cid"]).withColumn("sqdist", best["d"])
 
 
-def kmeans_init(
-    df: DataFrame, k: int, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> list[tuple[int, list[float]]]:
-    """Deterministic init: the k lowest-id vectors, cluster id = rank.
-    (Sorted-limit — a TakeOrdered, not a full sort.)"""
+def _lowest_id_vectors(
+    df: DataFrame, k: int, id_col: str, vec_col: str
+) -> list[list[float]]:
+    """Deterministic Lloyd init: the k lowest-id vectors in id order, in
+    one bounded collect (a sorted limit — a TakeOrdered, not a full
+    sort)."""
     rows = (
         df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
         .orderBy("_id")
         .limit(k)
         .collect()
     )
-    return [(i, [float(x) for x in r["_v"]]) for i, r in enumerate(rows)]
+    return [[float(x) for x in r["_v"]] for r in rows]
+
+
+def _lloyd(
+    df: DataFrame,
+    books: list[list[tuple[int, list[float]]]],
+    subdim: int,
+    iters: int,
+    vec_col: str,
+) -> list[list[tuple[int, list[float]]]]:
+    """Lloyd's iterations for ``len(books)`` independent k-means, one
+    per contiguous ``subdim``-wide subspace, trained JOINTLY from the
+    initial codebooks ``books``: k-means is one subspace as wide as the
+    vector, PQ training is m of them.
+
+    Each iteration is one corpus scan, one aggregate and one bounded
+    collect for ALL subspaces: the map-only ``_nearest`` assignment per
+    subspace, then a single posexplode keyed by (subspace, cluster,
+    position-within-subspace), whose partials combine map-side — the
+    skew-proof per-position mean of ``label_centroids``.  Each mean is
+    rounded to ``CENTROID_DECIMALS`` so the cross-engine / cross-run
+    float-accumulation-order difference is quantized away before it
+    can flip a boundary assignment next round.  Only m*k*subdim rounded
+    doubles reach the driver per iteration — the same driver-side
+    footprint as Spark MLlib's KMeans.  Clusters that lose all members
+    are dropped (ids of survivors are stable).  Empty codebooks (an
+    empty corpus) are returned as they are.
+    """
+    if not all(books):
+        return books
+    m = len(books)
+    for _ in range(int(iters)):
+        codes = F.array(
+            *[_nearest(cb, _subvec(vec_col, j, subdim))["cid"] for j, cb in enumerate(books)]
+        )
+        per = (
+            df.select(codes.alias("_codes"), F.posexplode(F.col(vec_col)).alias("_pos", "_x"))
+            .filter(F.col("_pos") < m * subdim)
+            .select(
+                (F.col("_pos") / F.lit(subdim)).cast("int").alias("_j"),
+                (F.col("_pos") % F.lit(subdim)).alias("_subpos"),
+                F.col("_codes"),
+                F.col("_x"),
+            )
+            .withColumn("_cluster", F.element_at("_codes", F.col("_j") + 1))
+            .filter(F.col("_cluster").isNotNull())
+            .groupBy("_j", "_cluster", "_subpos")
+            .agg(_rounded_mean("_x"))
+            .collect()
+        )
+        acc: list[dict[int, dict[int, float]]] = [dict() for _ in range(m)]
+        for r in per:
+            acc[int(r["_j"])].setdefault(int(r["_cluster"]), {})[
+                int(r["_subpos"])
+            ] = float(r["_av"])
+        books = [
+            [(cid, [d[s] for s in sorted(d)]) for cid, d in sorted(acc[j].items())]
+            for j in range(m)
+        ]
+    return books
 
 
 def kmeans_fit(
@@ -496,42 +538,14 @@ def kmeans_fit(
     iters: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    decimals: int = 4,
 ) -> list[tuple[int, list[float]]]:
-    """Lloyd's iterations with deterministic init and quantized
-    centroids.
-
-    Each round: map-only assignment (plan-literal centroids), then the
-    skew-proof per-position mean of ``label_centroids`` (posexplode ->
-    groupBy(cluster, pos) -> avg), ROUNDED to ``decimals`` so the
-    cross-engine / cross-run float-accumulation-order difference is
-    quantized away before it can flip a boundary assignment next round.
-    Only k x dim rounded doubles ever reach the driver per iteration —
-    the same driver-side footprint as Spark MLlib's KMeans.  Clusters
-    that lose all members are dropped (ids of survivors are stable).
-    """
-    cents = kmeans_init(df, k, id_col, vec_col)
-    for _ in range(int(iters)):
-        assigned = kmeans_assign(df, cents, id_col, vec_col)
-        per_pos = (
-            assigned.select(
-                "cluster", F.posexplode(F.col(vec_col)).alias("_pos", "_x")
-            )
-            .groupBy("cluster", "_pos")
-            .agg(F.round(F.avg(F.col("_x").cast("double")), decimals).alias("_av"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("_pos", "_av"))),
-                    lambda s: s["_av"],
-                ).alias("c")
-            )
-            .collect()
-        )
-        cents = sorted(
-            (int(r["cluster"]), [float(x) for x in r["c"]]) for r in per_pos
-        )
-    return cents
+    """k-means centroids as (cluster id, centroid): the k lowest-id
+    vectors (cluster id = rank) refined by ``iters`` rounds of
+    ``_lloyd`` over one subspace as wide as the vector.  ``iters=0``
+    returns the init."""
+    init = _lowest_id_vectors(df, k, id_col, vec_col)
+    dim = len(init[0]) if init else 0
+    return _lloyd(df, [list(enumerate(init))], dim, iters, vec_col)[0]
 
 
 def semantic_dedup(
@@ -618,15 +632,6 @@ def semantic_dedup(
     )
 
 
-def _subvec(vec_col: str, j: int, subdim: int) -> Column:
-    """Subspace ``j``'s slice of the vector, as doubles."""
-    return F.slice(
-        F.transform(F.col(vec_col), lambda x: x.cast("double")),
-        j * subdim + 1,
-        subdim,
-    )
-
-
 def _empty_adc_result(
     corpus: DataFrame, queries: DataFrame, id_col: str, query_id_col: str
 ) -> DataFrame:
@@ -671,91 +676,29 @@ def pq_train(
     iters: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    decimals: int = 4,
 ) -> list[list[tuple[int, list[float]]]]:
     """Train product-quantization codebooks: an independent k-means
-    per contiguous ``subdim``-wide subspace — the ``kmeans_fit``
-    recipe (deterministic lowest-id init, per-position means quantized
-    to ``decimals``), executed JOINTLY so each Lloyd iteration costs
-    ONE corpus scan and ONE aggregate for all m subspaces instead of
-    m sequential jobs.
+    per contiguous ``subdim``-wide subspace — ``_lloyd`` over m
+    subspaces, initialised from the k lowest-id vectors sliced
+    driver-side, so each iteration costs ONE corpus scan and ONE
+    aggregate for all m subspaces.
 
     PQ is the storage half of the IVF-PQ architecture every billion-
     vector ANN deployment uses (Jégou et al. 2011): a d-dim float
     vector compresses to ``m`` one-byte codes (here m log2(k) bits),
     so 100 TB of raw embeddings become ~1.5 TB of codes that FIT the
     cluster's memory while distances stay approximately rankable.
-    Driver footprint: m × k × subdim rounded doubles — same bounded
-    "k centroids" collect class as kmeans_fit itself.
+    Driver footprint: k init vectors, then m × k × subdim rounded
+    doubles per iteration — the same two bounded collects as
+    kmeans_fit.
     """
-    # Deterministic init in ONE bounded collect: the k lowest-id
-    # vectors, sliced into subspaces driver-side (value-identical to
-    # the per-subspace kmeans_init, which collected the same rows).
-    head = (
-        df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-        .orderBy("_id")
-        .limit(k)
-        .collect()
-    )
-    books: list[list[tuple[int, list[float]]]] = [
-        [
-            (
-                i,
-                [float(x) for x in r["_v"][j * subdim : (j + 1) * subdim]],
-            )
-            for i, r in enumerate(head)
-        ]
+    init = _lowest_id_vectors(df, k, id_col, vec_col)
+    books = [
+        [(i, v[j * subdim : (j + 1) * subdim]) for i, v in enumerate(init)]
         for j in range(m)
     ]
-    if head:
-        _validate_pq_books(books, subdim)
-
-    # Joint Lloyd iterations — ONE corpus scan and ONE aggregate per
-    # iteration for ALL m subspaces (the per-subspace loop re-scanned
-    # the corpus m times per iteration; r12 review finding).  The
-    # map-only assignment is pq_encode itself; the means come from a
-    # single posexplode keyed by (subspace, cluster, position-within-
-    # subspace), whose partials combine map-side, with the same
-    # per-position round-to-``decimals`` quantization kmeans_fit uses
-    # to absorb accumulation-order noise.  Driver traffic per
-    # iteration: m*k*subdim rounded doubles — unchanged.
-    for _ in range(int(iters)):
-        assigned = pq_encode(df, books, subdim, id_col, vec_col)
-        codes = F.array(
-            *[F.col(f"_code_{j}") for j in range(m)]
-        ).alias("_codes")
-        ex = (
-            assigned.select(codes, F.posexplode(F.col(vec_col)).alias("_pos", "_x"))
-            .filter(F.col("_pos") < m * subdim)
-            .select(
-                (F.col("_pos") / F.lit(subdim)).cast("int").alias("_j"),
-                (F.col("_pos") % F.lit(subdim)).alias("_subpos"),
-                F.col("_codes"),
-                F.col("_x"),
-            )
-            .withColumn("_cluster", F.element_at("_codes", F.col("_j") + 1))
-            .filter(F.col("_cluster").isNotNull())
-        )
-        per = (
-            ex.groupBy("_j", "_cluster", "_subpos")
-            .agg(
-                F.round(F.avg(F.col("_x").cast("double")), decimals).alias("_av")
-            )
-            .collect()
-        )
-        acc: list[dict[int, dict[int, float]]] = [dict() for _ in range(m)]
-        for r in per:
-            acc[int(r["_j"])].setdefault(int(r["_cluster"]), {})[
-                int(r["_subpos"])
-            ] = float(r["_av"])
-        books = [
-            [
-                (cid, [d[s] for s in sorted(d)])
-                for cid, d in sorted(acc[j].items())
-            ]
-            for j in range(m)
-        ]
-
+    _validate_pq_books(books, subdim)
+    books = _lloyd(df, books, subdim, iters, vec_col)
     _validate_pq_books(books, subdim)
     return books
 
@@ -767,28 +710,16 @@ def pq_encode(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Add ``_code_j`` columns: nearest codeword per subspace (squared
-    euclidean, ties to the lowest cid — the ``kmeans_assign`` argmin
-    contract).  Map-only: codebooks are plan literals, zero joins."""
+    """Add ``_code_j`` columns: nearest codeword per subspace
+    (``_nearest``, the ``kmeans_assign`` argmin; NULL for an empty
+    codebook).  Map-only: codebooks are plan literals, zero joins."""
     _validate_pq_books(codebooks, subdim)
     out = df
     for j, cb in enumerate(codebooks):
         if not cb:
             out = out.withColumn(f"_code_{j}", F.lit(None).cast("int"))
             continue
-        sv = _subvec(vec_col, j, subdim)
-
-        # NB: a (s, sv=sv) default-arg lambda would be read by pyspark
-        # as a TWO-parameter HOF lambda and receive the array INDEX as
-        # its second argument; pyspark invokes the lambda immediately
-        # at expression-build time, so a plain closure is safe.
-        def _score(s):
-            return F.struct(
-                sq_dist(s["c"], sv).alias("d"), s["cid"].alias("cid")
-            )
-
-        scored = F.transform(_centroid_struct_array(cb), _score)
-        out = out.withColumn(f"_code_{j}", F.array_min(scored)["cid"])
+        out = out.withColumn(f"_code_{j}", _nearest(cb, _subvec(vec_col, j, subdim))["cid"])
     return out
 
 
@@ -796,7 +727,7 @@ def _adc_expr(codebooks: list[list[tuple[int, list[float]]]]) -> Column:
     """Asymmetric-distance Column over ``_q_j`` (raw query subvectors)
     and ``_code_j`` (corpus codes): Σ_j ||q_j − codebook_j[code_j]||².
     Codeword lookup is an O(k) literal-array probe (plain single-param
-    closures — see the pq_encode lambda note)."""
+    closures — see the ``_nearest`` lambda note)."""
     approx = None
     for j, cb in enumerate(codebooks):
         code = F.col(f"_code_{j}")

@@ -47,17 +47,6 @@ def interleave_bits(a: Column, b: Column, bits: int = 16) -> Column:
     return reduce(add, terms)
 
 
-def normalize_to_bits(c: Column, lo: float, hi: float, bits: int = 16) -> Column:
-    """Map a numeric column into [0, 2^bits) with fixed bounds (pass
-    table min/max from a stats pass or catalog).  Clamps outliers."""
-    span = max(hi - lo, 1e-12)
-    scaled = ((c.cast("double") - F.lit(lo)) / F.lit(span)) * F.lit((1 << bits) - 1)
-    return F.least(
-        F.greatest(F.round(scaled).cast("long"), F.lit(0)),
-        F.lit((1 << bits) - 1),
-    )
-
-
 def zorder_by(
     df: DataFrame, a: Column, b: Column, n_partitions: int, bits: int = 16
 ) -> DataFrame:

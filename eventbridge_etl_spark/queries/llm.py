@@ -1096,16 +1096,15 @@ def text_document_frequency(spark, sf_dir):
     """,
 )
 def similarity_label_centroids(spark, sf_dir):
-    """Per-label embedding centroids via the Arrow applyInPandas path
-    (one Arrow batch per label through numpy) — the grouped-batch UDF
-    surface.  A built-in posexplode implementation with identical
-    output is unit-tested against it; that one is the skew-proof
-    100 TB path (see operators/similarity.py::label_centroids).
+    """Per-label embedding centroids (operators/similarity.py::
+    label_centroids): one posexplode -> groupBy(label, pos) mean, so a
+    skewed label spreads across all partitions — the same per-position
+    mean, rounded to 4dp, that the oracle's unnest computes.
 
     Emitted exploded as (label, pos, centroid_val, n_vectors) scalar
     rows — array-valued result columns aren't sortable by the driver's
     pandas canonicalizer."""
-    cent = S.label_centroids(_emb(spark, sf_dir), impl="arrow")
+    cent = S.label_centroids(_emb(spark, sf_dir))
     return cent.select(
         "label",
         F.posexplode("centroid").alias("pos", "centroid_val"),
@@ -1545,9 +1544,11 @@ def _kmeans_cte_sql(k: int, iters: int, dim: int = 64, decimals: int = 4) -> str
 def similarity_kmeans_refine(spark, sf_dir):
     """Two Lloyd iterations of k-means (k=8, deterministic init,
     quantized centroids) then the final assignment — the coarse
-    quantizer training step IVF and SemDeDup both sit on
-    (operators/similarity.py:kmeans_fit).  Assignment is map-only with
-    plan-literal centroids; each update is one posexplode aggregate."""
+    quantizer training step IVF and SemDeDup both sit on.
+    operators/similarity.py:kmeans_fit runs the PQ training kernel
+    (``_lloyd``) with one subspace as wide as the vector: assignment is
+    map-only with plan-literal centroids, and each update is one
+    posexplode aggregate and one bounded collect."""
     emb = _emb(spark, sf_dir)
     cents = S.kmeans_fit(emb, k=8, iters=2)
     out = S.kmeans_assign(emb, cents)

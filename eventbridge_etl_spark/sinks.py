@@ -185,15 +185,3 @@ def lakehouse_merge_upsert(
         )
     finally:
         batch.sparkSession.catalog.dropTempView(view)
-
-
-def lakehouse_foreach_batch(
-    target_table: str, keys: Sequence[str], version_col: str | None = None
-):
-    """``writeStream.foreachBatch`` adapter for the MERGE sink — the
-    lakehouse twin of ``KeyedParquetStore.foreach_batch``."""
-
-    def _sink(batch: DataFrame, epoch_id: int) -> None:
-        lakehouse_merge_upsert(batch, target_table, keys, version_col=version_col)
-
-    return _sink

@@ -14,7 +14,6 @@ adopt correct semantics deliberately — tests pin this divergence.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 
@@ -63,18 +62,3 @@ def read_csv_stream(
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.schema(schema).csv(landing_dir)
-
-
-def infer_csv_schema(spark: SparkSession, sample_path: str, **options: str) -> T.StructType:
-    """Infer a schema from one sample file for use by the streaming reader."""
-    return (
-        spark.read.options(**{"header": True, "inferSchema": True, **options})
-        .csv(sample_path)
-        .schema
-    )
-
-
-def with_input_file(df: DataFrame) -> DataFrame:
-    """Tag rows with their source file — lineage analog of the reference's
-    per-object Fargate task parameterization (O7)."""
-    return df.withColumn("_input_file", F.input_file_name())

@@ -9,7 +9,8 @@ test_registry_plan_audit pins the one sanctioned cross join:
 - a NEW collect anywhere in the package fails (no unbounded driver
   materialization can sneak in), and
 - a sanctioned site losing its bounding construct (the ``.limit(k)``,
-  the ``groupBy("cluster")``, the bucket-id ``collect_set``) fails too,
+  the Lloyd step's ``groupBy("_j", "_cluster", "_subpos")``, the
+  bucket-id ``collect_set``) fails too,
   so the sanction cannot silently outlive its justification.
 
 Queries modules are exempt from the scan: they only build DataFrames
@@ -31,14 +32,11 @@ SANCTIONED = [
     ("operators/upsert.py", r"F\.collect_set\(self\.BUCKET_COL\)",
      "observed set <= n_buckets values (bucket ids of the incoming batch)"),
     ("operators/similarity.py", r"\.limit\(k\)",
-     "kmeans_init: exactly k rows by construction"),
-    ("operators/similarity.py", r'\.groupBy\("cluster"\)',
-     "kmeans_fit: <= k rows (one per surviving cluster) x dim doubles"),
-    ("operators/similarity.py", r"\.limit\(k\)",
-     "pq_train init: exactly k rows (sliced into m subspaces driver-side)"),
+     "Lloyd init (kmeans_fit, pq_train): exactly k rows (sliced into m "
+     "subspaces driver-side)"),
     ("operators/similarity.py", r'\.groupBy\("_j", "_cluster", "_subpos"\)',
-     "pq_train iteration: <= m*k*subdim rounded doubles (one per "
-     "subspace x surviving cluster x position)"),
+     "Lloyd iteration (kmeans_fit with m = 1, pq_train): <= m*k*subdim "
+     "rounded doubles (one per subspace x surviving cluster x position)"),
 ]
 
 COLLECT_RE = re.compile(r"\.collect\(\)|\.toPandas\(\)|\.get\[")

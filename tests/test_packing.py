@@ -80,7 +80,7 @@ def _clustered(spark):
 
 def test_kmeans_recovers_separated_blobs(spark):
     df = _clustered(spark)
-    cents = S.kmeans_fit(df, k=3, iters=3, decimals=4)
+    cents = S.kmeans_fit(df, k=3, iters=3)
     out = S.kmeans_assign(df, cents).collect()
     by_cluster = {}
     for r in out:

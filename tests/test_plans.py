@@ -224,7 +224,7 @@ def test_kmeans_assignment_is_map_only(spark):
     from eventbridge_etl_spark.operators import similarity as S
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    cents = S.kmeans_init(emb, k=4)
+    cents = S.kmeans_fit(emb, k=4, iters=0)
     plan = (
         S.kmeans_assign(emb, cents)
         ._jdf.queryExecution()

@@ -3,7 +3,6 @@ geometry; LSH recall against the brute-force baseline on the fixture."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from eventbridge_etl_spark.operators import similarity as S
@@ -109,32 +108,6 @@ def test_ivf_respects_custom_centroids(spark):
     assert sorted(map(tuple, ivf.collect())) == sorted(map(tuple, exact.collect()))
 
 
-def test_label_centroids_builtin_matches_arrow(spark):
-    from eventbridge_etl_spark.operators.similarity import label_centroids
-    from eventbridge_etl_spark.sources.tables import load_tables
-
-    emb = load_tables(spark, SF_DIR, ("embeddings",))["embeddings"]
-    a = {
-        r["label"]: (tuple(r["centroid"]), r["n_vectors"])
-        for r in label_centroids(emb, impl="arrow").collect()
-    }
-    b = {
-        r["label"]: (tuple(r["centroid"]), r["n_vectors"])
-        for r in label_centroids(emb, impl="builtin").collect()
-    }
-    assert a == b
-    assert len(a) == 10 and all(len(c) == 64 for c, _ in a.values())
-
-
-def test_label_centroids_rejects_unknown_impl(spark):
-    from eventbridge_etl_spark.operators.similarity import label_centroids
-    from eventbridge_etl_spark.sources.tables import load_tables
-
-    emb = load_tables(spark, SF_DIR, ("embeddings",))["embeddings"]
-    with pytest.raises(ValueError):
-        label_centroids(emb, impl="numpy")
-
-
 def test_quantize_int8_roundtrip_error_bounded(spark):
     """Dequantized vectors must sit within half a quantization step of
     the original, and qvals must span the full int8 range symmetrically."""
@@ -154,23 +127,32 @@ def test_quantize_int8_roundtrip_error_bounded(spark):
             assert abs(float(orig) - qv / r["scale"]) <= 0.5 / r["scale"] + 1e-9
 
 
-def test_label_centroids_string_labels_both_impls(spark):
-    """r6 review fix: the arrow impl hardcoded `label int` in its
-    output schema, breaking string-labeled corpora."""
+def test_label_centroids_by_hand(spark):
+    """String labels keep their type, a NULL label is its own group, a
+    NULL vector is dropped (not counted), and each position's mean is
+    rounded to CENTROID_DECIMALS."""
     from eventbridge_etl_spark.operators.similarity import label_centroids
 
     df = spark.createDataFrame(
-        [("news", [1.0, 3.0]), ("news", [3.0, 5.0]), ("spam", [0.0, 2.0])],
+        [
+            ("news", [1.0, 3.0]),
+            ("news", [2.0, 6.0]),
+            ("news", None),
+            ("spam", [0.0, 2.0]),
+            (None, [0.0, 1.0]),
+            (None, [0.0, 1.0]),
+            (None, [1.0, 0.0]),
+        ],
         "label string, embedding array<double>",
     )
-    a = {r["label"]: r for r in
-         label_centroids(df, "label", "embedding", impl="builtin").collect()}
-    b = {r["label"]: r for r in
-         label_centroids(df, "label", "embedding", impl="arrow").collect()}
-    assert set(a) == set(b) == {"news", "spam"}
-    for lbl in a:
-        assert list(a[lbl]["centroid"]) == list(b[lbl]["centroid"])
-        assert a[lbl]["n_vectors"] == b[lbl]["n_vectors"]
+    out = label_centroids(df, "label", "embedding")
+    assert dict(out.dtypes)["label"] == "string"
+    got = {r["label"]: (list(r["centroid"]), r["n_vectors"]) for r in out.collect()}
+    assert got == {
+        "news": ([1.5, 4.5], 2),
+        "spam": ([0.0, 2.0], 1),
+        None: ([0.3333, 0.6667], 3),
+    }
 
 
 def _pq_corpus(spark):
